@@ -287,12 +287,13 @@ final class MergeTable(
     * COMPLETION MARKER commit after the op's own commits all landed
     * (same entries + the txn line) — so the skip decision implies the
     * WHOLE op committed, not just its first commit: a multi-commit op
-    * (applyChanges' upsert-then-delete, the sink's changes mode) that
-    * crashes midway leaves no watermark and replays in full, which
-    * per-batch idempotence makes safe; recording on the first commit
-    * instead would make replay skip the op's unfinished tail and lose
-    * it forever. An op that commits nothing records nothing (replay
-    * re-runs the no-op). Returns None on skip.
+    * (a write and the auto-compaction it triggers, several writes
+    * under one batch id) that crashes midway leaves no watermark and
+    * replays in full, which per-batch idempotence makes safe;
+    * recording on the first commit instead would make replay skip the
+    * op's unfinished tail and lose it forever. An op that commits
+    * nothing records nothing (replay re-runs the no-op). Returns None
+    * on skip.
     */
   def txn[T](appId: String, version: Long)(op: => T): Option[T] = {
     require(!appId.contains("=") && !appId.contains("\n") && !appId.contains(":"),
@@ -834,77 +835,85 @@ final class MergeTable(
 
   /** Everything the scoped-merge paths need to know about a batch,
     * from ONE bounded collect: the buckets its keys hash into, the
-    * leaf dirs its rows land in, and its distinct key set as a
-    * driver-local relation. Before this, each was its own Spark job —
-    * bucket collect, leaf collect, broadcast-size probe count, plus a
-    * fresh broadcast BUILD of the key set per consuming join — and
-    * every one of them re-evaluated the whole batch subtree (for the
-    * CDC gates, a window over the change stream, re-run 4-6× per
-    * commit). The local-relation key set makes each downstream
-    * broadcast build a driver-side LocalTableScan, no batch recompute.
+    * leaf dirs its rows land in, whether any row lands at all, and
+    * its distinct key set as a driver-local relation. Before this,
+    * each was its own Spark job — bucket collect, leaf collect,
+    * broadcast-size probe count, plus a fresh broadcast BUILD of the
+    * key set per consuming join — and every one of them re-evaluated
+    * the whole batch subtree (for the CDC gates, a window over the
+    * change stream, re-run 4-6× per commit). The local-relation key
+    * set makes each downstream broadcast build a driver-side
+    * LocalTableScan, no batch recompute.
     */
   private final case class BatchSummary(
-      buckets: Set[Long], leaves: Set[String], keySet: DataFrame)
+      buckets: Set[Long], leaves: Set[String], keySet: DataFrame, hasRows: Boolean)
 
-  /** One job over the batch: distinct (partition cols…, bucket, keys…)
-    * rows, abandoned (None) past `broadcastKeyLimit` rows so an
+  /** One job over a replace step's input (see [[replace]]): distinct
+    * (partition cols…, bucket, keys…, landing) rows of `rows` ∪
+    * `dropKeys`, abandoned (None) past `broadcastKeyLimit` rows so an
     * unbounded batch keeps the per-value multi-job path instead of
     * pulling itself onto the driver — the same memory bound the
-    * broadcast key set already implied.
+    * broadcast key set already implied. Buckets and the key set cover
+    * both inputs; leaf names (rendered when `withPartitions`) cover
+    * only the landing `rows`.
     */
-  private def batchSummary(changes: DataFrame, withPartitions: Boolean,
-      withBucket: Boolean, renderLeaves: Boolean = false): Option[BatchSummary] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val pcols = if (withPartitions) partitionCols else Nil
-    val sel = pcols.map(col) ++
-      (if (withBucket) Seq(bucketExpr.as(BucketCol)) else Nil) ++ keys.map(col)
-    val projected = changes.select(sel: _*).distinct()
+  private def batchSummary(rows: Option[DataFrame], dropKeys: Option[DataFrame],
+      withPartitions: Boolean, withBucket: Boolean): Option[BatchSummary] = {
+    val pcols = if (withPartitions && rows.isDefined) partitionCols else Nil
+    val bucket = if (withBucket) Seq(bucketExpr.as(BucketCol)) else Nil
+    val landing = "_graft_landing"
+    val rowSide = rows.map(r => r.select(pcols.map(col) ++ bucket ++ keys.map(col) :+
+      lit(true).as(landing): _*))
+    val dropSide = dropKeys.map(d => d.select(pcols.map(c =>
+      lit(null).cast(rows.get.schema(c).dataType).as(c)) ++ bucket ++ keys.map(col) :+
+      lit(false).as(landing): _*))
+    val projected = (rowSide.toSeq ++ dropSide).reduce(_.union(_)).distinct()
     val limit = broadcastKeyLimit
-    val rows = projected.limit(math.min(limit + 1, Int.MaxValue.toLong).toInt).collect()
-    if (rows.length > limit) return None
+    val collected = projected.limit(math.min(limit + 1, Int.MaxValue.toLong).toInt).collect()
+    if (collected.length > limit) return None
     val projSchema = projected.schema
     val bIdx = pcols.size
-    val kOff = pcols.size + (if (withBucket) 1 else 0)
+    val kOff = pcols.size + bucket.size
+    val lIdx = kOff + keys.size
     val buckets =
-      if (withBucket) rows.map(_.getLong(bIdx)).toSet else Set.empty[Long]
-    // leaf names rendered EXACTLY like composedLeafNames /
-    // partitionLeafNames (escapePathName over toString — aligned with
-    // Spark's partition-dir naming by requirePartitionable's type gate)
+      if (withBucket) collected.map(_.getLong(bIdx)).toSet else Set.empty[Long]
     val leaves =
-      if (!renderLeaves) Set.empty[String]
-      else rows.map { r =>
-        val parts = pcols.zipWithIndex.map { case (c, i) =>
-          val v = r.get(i)
-          val rendered =
-            if (v == null) "__HIVE_DEFAULT_PARTITION__"
-            else ExternalCatalogUtils.escapePathName(v.toString)
-          s"$PartPrefix$c=$rendered"
-        }.mkString("/")
-        if (withBucket) s"$parts/$BucketCol=${r.getLong(bIdx)}" else parts
-      }.toSet
-    // a key may appear under several partition tuples — dedupe by the
-    // key VALUES (Seq equality handles nulls), never by Row identity
-    val keyVals = rows.map(r => (kOff until projSchema.length).map(r.get)).distinct
+      if (pcols.isEmpty) Set.empty[String]
+      else collected.filter(_.getBoolean(lIdx)).map(leafName(_, withBucket)).toSet
+    // a key may appear under several partition tuples, and once landing
+    // and once dropped — dedupe by the key VALUES (Seq equality handles
+    // nulls; binary values compare by content, not array identity),
+    // never by Row identity
+    val keyVals = collected.map(r => (kOff until lIdx).map(r.get))
+      .distinctBy(_.map { case b: Array[Byte] => b.toSeq; case v => v })
     val keyRows: Seq[org.apache.spark.sql.Row] =
       keyVals.map(org.apache.spark.sql.Row.fromSeq).toSeq
     val ksLocal = spark.createDataFrame(keyRows.asJava,
-      org.apache.spark.sql.types.StructType(projSchema.drop(kOff)))
-    Some(BatchSummary(buckets, leaves, broadcast(ksLocal)))
+      org.apache.spark.sql.types.StructType(projSchema.slice(kOff, lIdx)))
+    Some(BatchSummary(buckets, leaves, broadcast(ksLocal), collected.exists(_.getBoolean(lIdx))))
   }
+
+  /** Rows in the driver-local key set of a summary over `rows` ∪
+    * `dropKeys` (test hook for the key dedupe).
+    */
+  private[cdc] def summaryKeyCount(rows: DataFrame, dropKeys: DataFrame): Option[Long] =
+    batchSummary(Some(rows), Some(dropKeys), withPartitions = false, withBucket = false)
+      .map(_.keySet.count())
 
   /** Exact row count of a just-written data dir, served from the
     * footer stats [[recordStats]] persisted at write time — a
     * driver-side JSON read instead of a Spark count job. None unless
     * the stats cover EVERY parquet file in the dir (stats are
     * advisory; a partial sum could undercount and must never be
-    * served), so callers fall back to the count job.
+    * served) and the dir lists at least one file (an empty listing
+    * proves nothing about what was written), so callers fall back to
+    * the count job.
     */
-  private def statsRowCount(dir: String): Option[Long] = {
+  private[cdc] def statsRowCount(dir: String): Option[Long] = {
     val base = dataDir.resolve(dir)
     FileStats.readFull(rootPath, dir).flatMap { full =>
       val files = FileStats.listParquetFiles(base).map(f => base.relativize(f).toString)
       if (files.nonEmpty && files.forall(full.contains)) Some(files.map(full(_).rows).sum)
-      else if (files.isEmpty) Some(0L)
       else None
     }
   }
@@ -1604,8 +1613,8 @@ final class MergeTable(
     * commit). Every mutator re-reads the manifest on entry, so a
     * retry recomputes against the winning writer's snapshot; and
     * upsert/delete/append of the same batch are idempotent per batch,
-    * so re-running a partially-applied multi-commit operation (e.g.
-    * applyChanges) converges. This is Iceberg's commit-retry loop,
+    * so re-running a partially-applied multi-commit operation (a write
+    * and its auto-compaction) converges. This is Iceberg's commit-retry loop,
     * surfaced as an explicit combinator.
     */
   def withRetry[T](maxAttempts: Int = 5)(op: => T): T = {
@@ -1719,7 +1728,7 @@ final class MergeTable(
   }
 
   /** Commit an externally-staged FIRST write of a bucketed table —
-    * the staged twin of seedBucketed: the staging dir already holds
+    * the staged twin of a bucketed seed: the staging dir already holds
     * `_graft_bucket=<i>` leaf dirs (the v2 writer demuxes rows by the
     * replayed write-side hash). Throws CommitConflictException if a
     * concurrent writer seeded first — the caller owns the fallback.
@@ -1919,94 +1928,118 @@ final class MergeTable(
     * per key (use [[Precombine.latestByKey]]). Matched keys take the
     * change row, unmatched existing rows are kept, new keys insert.
     * Schemas union (allowMissingColumns) so added columns evolve the
-    * table.
+    * table. One [[replace]] commit with nothing dropped.
     *
     * COW: full rewrite (one join). Bucketed COW: only buckets
     * containing changed keys are rewritten. MOR: O(batch) delta
     * append + periodic compaction.
     */
   def upsert(changes: DataFrame): Unit = withOp("upsert") {
-    // constraints are declared against LOGICAL names, so they check
-    // the batch before the column-mapping translation
-    enforceConstraints(changes)
-    upsertUnchecked(withDerived(toPhysical(changes)))
+    replace(Some(landable(changes)), None)
   }
 
-  private def upsertUnchecked(changes: DataFrame): Unit = mode match {
-    case MergeTable.DeletionVectors =>
-      if (!exists) {
-        if (numBuckets.isDefined) seedBucketed(changes)
-        else commit(Seq("base" -> writeData(changes)))
-      } else {
-        // O(batch) write: mask the matched keys' current positions,
-        // append the change rows as a new base file — no data-file
-        // rewrite, no key-shuffle on read. One atomic commit carries
-        // both entries, so readers never see the mask without the
-        // replacement rows. Bucketed: the position scan touches only
-        // the buckets the batch hashes into, and the appended rows
-        // land bucket-partitioned (a bucket may accumulate several
-        // dirs between compactions — masks, not manifest order, do
-        // the superseding).
+  /** Constraint check + column-mapping translation of rows about to
+    * land. Constraints are declared against LOGICAL names, so they
+    * check the batch before the translation.
+    */
+  private def landable(rows: DataFrame): DataFrame = {
+    enforceConstraints(rows)
+    withDerived(toPhysical(rows))
+  }
+
+  /** The ONE write step behind upsert, delete, applyChanges and the
+    * sink's changes mode: replace every stored row whose key is in
+    * keys(`rows`) ∪ `dropKeys` by `rows`, in ONE commit — Iceberg's
+    * single-snapshot `MERGE … WHEN MATCHED AND op='d' THEN DELETE`.
+    * `rows` (physical, one per key) are what lands; `dropKeys` are
+    * keys to remove that no row replaces, and callers keep the two
+    * key sets disjoint. One bounded [[batchSummary]] over the union
+    * key set serves the mask, the anti-join and the rebase validation:
+    *
+    *  - COW flat: one rewrite, `current ⟕anti keys ∪ rows`.
+    *  - COW bucketed / partitioned / composed: the scoped merge of
+    *    the touched buckets or cells.
+    *  - MOR: one delta holding `rows` plus tombstones for `dropKeys`.
+    *  - DV: one mask over the union keys plus an appended base of
+    *    `rows`, in one [[commitAppend]].
+    *
+    * A fresh table is seeded from `rows` (nothing stored to drop).
+    */
+  private def replace(rows: Option[DataFrame], dropKeys: Option[DataFrame]): Unit =
+    if (rows.isEmpty && dropKeys.isEmpty) ()
+    else if (!exists) rows.foreach(seed)
+    else mode match {
+      case MergeTable.DeletionVectors => dvReplace(rows, dropKeys)
+      case MergeTable.MergeOnRead =>
+        // subsequent writes are flat O(batch) deltas whatever the
+        // layout — key reconciliation supersedes the old row even when
+        // the new one belongs to a DIFFERENT partition, so partition
+        // moves need no write-time index lookup. Type-gate the rows
+        // now: a delta with a non-renderable partition column would
+        // only explode at compaction time.
+        if (partitionCols.nonEmpty) rows.foreach(requirePartitionable)
+        val tombstones = dropKeys.map(_.select(keys.map(col): _*).distinct()
+          .withColumn(Tombstone, lit(true)))
+        val delta = (rows.toSeq ++ tombstones).reduce(_.unionByName(_, allowMissingColumns = true))
+        commitAppend(entries(), Seq("delta" -> writeData(delta)), None)
+        maybeCompact()
+      case _ if composed => composedMerge(rows, dropKeys)
+      case _ if partitionCols.nonEmpty => partitionedMerge(rows, dropKeys)
+      case _ if numBuckets.isDefined => bucketedMerge(rows, dropKeys)
+      case _ =>
         val es = entries()
-        val baseV = readVersion // writeMask re-reads the manifest below
-        // one bounded collect serves the key set AND the bucket scope
-        // (the old path ran a probe count, a bucket collect, and TWO
-        // key-set derivations — each re-evaluating the batch)
-        val summary = batchSummary(changes,
-          withPartitions = false, withBucket = numBuckets.isDefined)
-        val ks = summary.map(_.keySet).getOrElse(keySet(changes, dedup = true))
-        val scope = numBuckets.map(_ =>
-          summary.map(_.buckets).getOrElse(affectedBuckets(changes)))
-        val dv = writeMask(ks, scope)
-        val appended =
-          if (numBuckets.isDefined) writeBucketed(changes)
-          else Seq("base" -> writeData(changes))
-        commitAppend(es, dv.toSeq ++ appended,
-          validateKeys = Some(ks),
-          baseVersion = baseV)
-        maybeCompact()
-      }
-    case MergeTable.MergeOnRead =>
-      // first write seeds the base (bucket- or value-partitioned per
-      // the layout); subsequent upserts are flat O(batch) deltas
-      // either way — key reconciliation supersedes the old row even
-      // when the new one belongs to a DIFFERENT partition, so
-      // partition moves need no write-time index lookup
-      if (!exists) {
-        if (composed) { requirePartitionable(changes); commit(writeComposed(changes)) }
-        else if (numBuckets.isDefined) seedBucketed(changes)
-        else if (partitionCols.nonEmpty) {
-          requirePartitionable(changes); commit(writePartitioned(changes))
-        } else commit(Seq("base" -> writeData(changes)))
-      } else {
-        // type-gate the batch now: a delta with a non-renderable
-        // partition column would only explode at compaction time
-        if (partitionCols.nonEmpty) requirePartitionable(changes)
-        commitAppend(entries(), Seq("delta" -> writeData(changes)), None)
-        maybeCompact()
-      }
-    case _ if composed =>
-      if (!exists) { requirePartitionable(changes); commit(writeComposed(changes)) }
-      else composedMerge(changes, isDelete = false)
-    case _ if partitionCols.nonEmpty =>
-      if (!exists) { requirePartitionable(changes); commit(writePartitioned(changes)) }
-      else partitionedMerge(changes, isDelete = false)
-    case _ if numBuckets.isDefined => bucketedMerge(changes, isDelete = false)
-    case _ =>
-      val es = entries()
-      val result =
-        if (!exists) changes
-        else {
-          val current = rewriteSource()
-          // the local-relation key set spares the write job a second
-          // evaluation of the batch inside its broadcast build (anti-
-          // join semantics are dedup-insensitive)
-          val ks = batchSummary(changes, withPartitions = false, withBucket = false)
-            .map(_.keySet).getOrElse(keySet(changes))
-          val keep = current.join(ks, keys, "left_anti")
-          changes.unionByName(keep, allowMissingColumns = true)
-        }
-      commit(ledgerEntries(es) ++ Seq("base" -> writeData(result)))
+        // the local-relation key set spares the write job a second
+        // evaluation of the batch inside its broadcast build (anti-
+        // join semantics are dedup-insensitive)
+        val ks = batchSummary(rows, dropKeys, withPartitions = false, withBucket = false)
+          .map(_.keySet).getOrElse(keySet(unionKeys(rows, dropKeys)))
+        val keep = rewriteSource().join(ks, keys, "left_anti")
+        val result = rows.map(_.unionByName(keep, allowMissingColumns = true)).getOrElse(keep)
+        commit(ledgerEntries(es) ++ Seq("base" -> writeData(result)))
+    }
+
+  /** First write of any layout: one write job in the layout's shape. */
+  private def seed(rows: DataFrame): Unit =
+    if (composed) { requirePartitionable(rows); commit(writeComposed(rows)) }
+    else if (numBuckets.isDefined) commit(writeBucketed(rows))
+    else if (partitionCols.nonEmpty) { requirePartitionable(rows); commit(writePartitioned(rows)) }
+    else commit(Seq("base" -> writeData(rows)))
+
+  /** The key columns of a replace step's two inputs, unioned — the
+    * fallback key source when the batch is too large to summarize.
+    */
+  private def unionKeys(rows: Option[DataFrame], dropKeys: Option[DataFrame]): DataFrame =
+    (rows.toSeq ++ dropKeys).map(_.select(keys.map(col): _*)).reduce(_.union(_))
+
+  /** Deletion-vector replace: O(batch), no data-file rewrite, no
+    * key-shuffle on read — mask the union keys' current positions and
+    * append the rows as a new base file. One atomic commit carries
+    * both entries, so readers never see the mask without the
+    * replacement rows. Bucketed: the position scan touches only the
+    * buckets the keys hash into, and the appended rows land
+    * bucket-partitioned (a bucket may accumulate several dirs between
+    * compactions — masks, not manifest order, do the superseding). A
+    * step that masks nothing and lands nothing commits nothing
+    * (idempotent replay converges without version churn).
+    */
+  private def dvReplace(rows: Option[DataFrame], dropKeys: Option[DataFrame]): Unit = {
+    val es = entries()
+    val baseV = readVersion // writeMask re-reads the manifest below
+    val summary = batchSummary(rows, dropKeys,
+      withPartitions = false, withBucket = numBuckets.isDefined)
+    val ks = summary.map(_.keySet).getOrElse(keySet(unionKeys(rows, dropKeys), dedup = true))
+    val scope = numBuckets.map(_ =>
+      summary.map(_.buckets).getOrElse(affectedBuckets(unionKeys(rows, dropKeys))))
+    val dv = writeMask(ks, scope)
+    // the summary proves an empty `rows` (every row dropped) without
+    // writing an empty base file
+    val appended = rows.filter(_ => summary.forall(_.hasRows)).toSeq.flatMap { r =>
+      if (numBuckets.isDefined) writeBucketed(r) else Seq("base" -> writeData(r))
+    }
+    if (dv.nonEmpty || appended.nonEmpty) {
+      commitAppend(es, dv.toSeq ++ appended, validateKeys = Some(ks), baseVersion = baseV)
+      maybeCompact()
+    }
   }
 
   /** `ing` file-ledger entries ([[copyInto]]) survive every snapshot-
@@ -2020,60 +2053,25 @@ final class MergeTable(
   private def ledgerEntries(es: Seq[(String, String)]): Seq[(String, String)] =
     es.filter(_._1 == "ing")
 
-  /** Key-delete: drop all rows whose PK appears in `deleteKeys`. */
+  /** Key-delete: drop all rows whose PK appears in `deleteKeys` — one
+    * [[replace]] commit that lands no rows.
+    */
   def delete(deleteKeys: DataFrame): Unit = withOp("delete") {
     require(exists, s"cannot delete from uninitialized table $root")
-    mode match {
-      case MergeTable.DeletionVectors =>
-        // Pure mask commit: the deleted rows' files are untouched.
-        // A delete matching nothing commits nothing (idempotent
-        // replay converges without version churn). Bucketed: the
-        // position scan touches only the keys' buckets.
-        val es = entries()
-        val baseV = readVersion // writeMask re-reads the manifest below
-        val summary = batchSummary(deleteKeys,
-          withPartitions = false, withBucket = numBuckets.isDefined)
-        val ks = summary.map(_.keySet).getOrElse(keySet(deleteKeys, dedup = true))
-        val scope = numBuckets.map(_ =>
-          summary.map(_.buckets).getOrElse(affectedBuckets(deleteKeys)))
-        writeMask(ks, scope)
-          .foreach { dv =>
-            commitAppend(es, Seq(dv),
-              validateKeys = Some(ks),
-              baseVersion = baseV)
-            maybeCompact()
-          }
-      case MergeTable.MergeOnRead =>
-        val tombstones = deleteKeys.select(keys.map(col): _*).distinct()
-          .withColumn(Tombstone, lit(true))
-        commitAppend(entries(), Seq("delta" -> writeData(tombstones)), None)
-        maybeCompact()
-      case _ if composed => composedMerge(deleteKeys, isDelete = true)
-      case _ if partitionCols.nonEmpty => partitionedMerge(deleteKeys, isDelete = true)
-      case _ if numBuckets.isDefined => bucketedMerge(deleteKeys, isDelete = true)
-      case _ =>
-        val es = entries()
-        val ks = batchSummary(deleteKeys, withPartitions = false, withBucket = false)
-          .map(_.keySet).getOrElse(keySet(deleteKeys, dedup = true))
-        val result = rewriteSource().join(ks, keys, "left_anti")
-        commit(ledgerEntries(es) ++ Seq("base" -> writeData(result)))
-    }
+    replace(None, Some(deleteKeys.select(keys.map(col): _*)))
   }
 
   /** Partition-scoped merge: rewrite only the buckets whose keys are
     * touched by this batch. One write job; untouched buckets keep
-    * their existing directories.
+    * their existing directories (buckets emptied by drops vanish).
     */
-  private def bucketedMerge(changes: DataFrame, isDelete: Boolean): Unit = {
-    val n = numBuckets.get
-    val tagged = changes.withColumn(BucketCol, bucketExpr)
+  private def bucketedMerge(rows: Option[DataFrame], dropKeys: Option[DataFrame]): Unit = {
     // one collect serves the touched-bucket set AND the key set (the
     // old path collected buckets, probe-counted the key set, and
     // rebuilt its broadcast per consuming join)
-    val summary = batchSummary(changes, withPartitions = false, withBucket = true)
-    val affected = summary.map(_.buckets).getOrElse(
-      tagged.select(BucketCol).distinct()
-        .collect().map(_.getLong(0)).toSet) // bounded by numBuckets
+    val summary = batchSummary(rows, dropKeys, withPartitions = false, withBucket = true)
+    val affected = summary.map(_.buckets)
+      .getOrElse(affectedBuckets(unionKeys(rows, dropKeys))) // bounded by numBuckets
     val currentSeq = entries()
     val current = currentSeq.toMap // tag -> dir; bucket entries are b<i>
     // only b<digits> tags are bucket entries; a non-bucketed layout
@@ -2084,26 +2082,18 @@ final class MergeTable(
       s"table at $root has a non-bucketed layout; migrate before opening with numBuckets")
     val affectedDirs = affected.toSeq.sorted
       .flatMap(i => current.get(s"b$i").map(i -> _))
-    val base =
-      if (affectedDirs.isEmpty) None
-      else Some(readDirs(affectedDirs.map(_._2)).withColumn(BucketCol, bucketExpr))
-    lazy val ks = summary.map(_.keySet).getOrElse(keySet(tagged, dedup = true))
-    val result =
-      if (isDelete)
-        base.map(_.join(ks, keys, "left_anti"))
-          .getOrElse(return)
-      else base match {
-        case None => tagged
-        case Some(b) =>
-          val keep = b.join(ks, keys, "left_anti")
-          tagged.unionByName(keep, allowMissingColumns = true)
-      }
+    val ks = summary.map(_.keySet)
+      .getOrElse(keySet(unionKeys(rows, dropKeys), dedup = true))
+    val keep = if (affectedDirs.isEmpty) None
+      else Some(readDirs(affectedDirs.map(_._2)).withColumn(BucketCol, bucketExpr)
+        .join(ks, keys, "left_anti"))
+    val result = (rows.map(_.withColumn(BucketCol, bucketExpr)).toSeq ++ keep)
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse(return) // nothing lands and no touched bucket holds data
     val dir = UUID.randomUUID().toString
     result.write.mode(SaveMode.Overwrite)
       .partitionBy(BucketCol)
       .parquet(dataDir.resolve(dir).toString)
-    // manifest: affected buckets move to the new dir (buckets emptied
-    // by deletes vanish); untouched buckets keep their old entries
     val written = listBuckets(dir)
     written.foreach(i => recordStats(s"$dir/$BucketCol=$i"))
     val updated = written.toSeq.sorted.map(i => s"b$i" -> s"$dir/$BucketCol=$i")
@@ -2140,10 +2130,6 @@ final class MergeTable(
     written.foreach(i => recordStats(s"$dir/$BucketCol=$i"))
     written.toSeq.sorted.map(i => s"b$i" -> s"$dir/$BucketCol=$i")
   }
-
-  /** First write of a bucketed table: one bucket-partitioned job. */
-  private def seedBucketed(df: DataFrame): Unit =
-    commit(writeBucketed(df))
 
   // -- value-partitioned layout --------------------------------------------
 
@@ -2198,20 +2184,29 @@ final class MergeTable(
 
   /** The leaf-dir names a batch's rows land in, rendered EXACTLY like
     * Spark's partition-dir naming (escapePathName over toString —
-    * guaranteed aligned by [[requirePartitionable]]'s type gate).
-    * Bounded by the batch's distinct partition tuples.
+    * guaranteed aligned by [[requirePartitionable]]'s type gate), with
+    * the key-hash bucket appended on the composed layout. Bounded by
+    * the batch's distinct (partition, bucket) tuples.
     */
-  private def partitionLeafNames(df: DataFrame): Set[String] = {
+  private def leafNames(df: DataFrame, withBucket: Boolean): Set[String] =
+    df.select(partitionCols.map(col) ++
+        (if (withBucket) Seq(bucketExpr.as(BucketCol)) else Nil): _*)
+      .distinct().collect().map(leafName(_, withBucket)).toSet
+
+  /** One leaf name from a row holding the partition values (in
+    * `partitionCols` order) and, when `withBucket`, the bucket id after
+    * them — the ONE rendering every leaf-name derivation shares.
+    */
+  private def leafName(r: org.apache.spark.sql.Row, withBucket: Boolean): String = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    df.select(partitionCols.map(col): _*).distinct().collect().map { r =>
-      partitionCols.zipWithIndex.map { case (c, i) =>
-        val v = r.get(i)
-        val rendered =
-          if (v == null) "__HIVE_DEFAULT_PARTITION__"
-          else ExternalCatalogUtils.escapePathName(v.toString)
-        s"$PartPrefix$c=$rendered"
-      }.mkString("/")
-    }.toSet
+    val parts = partitionCols.zipWithIndex.map { case (c, i) =>
+      val v = r.get(i)
+      val rendered =
+        if (v == null) "__HIVE_DEFAULT_PARTITION__"
+        else ExternalCatalogUtils.escapePathName(v.toString)
+      s"$PartPrefix$c=$rendered"
+    }.mkString("/")
+    if (withBucket) s"$parts/$BucketCol=${r.getLong(partitionCols.size)}" else parts
   }
 
   /** Partition-scoped COW merge: rewrite ONLY the partition dirs the
@@ -2222,7 +2217,8 @@ final class MergeTable(
     * commit. Untouched partitions keep their directories verbatim; at
     * 100 TB a CDC batch pays for its partitions, not the table.
     */
-  private def partitionedMerge(changes: DataFrame, isDelete: Boolean): Unit = {
+  private def partitionedMerge(rows: Option[DataFrame], dropKeys: Option[DataFrame]): Unit = {
+    rows.foreach(requirePartitionable)
     val current = entries()
     require(current.forall(_._1 == "pv"),
       s"table at $root has a non-partitioned layout; migrate before opening with partitionCols")
@@ -2230,9 +2226,8 @@ final class MergeTable(
     // one collect serves the key set and the landing leaf names (the
     // old path probe-counted the key set, collected leaf names in a
     // second job, and rebuilt the key-set broadcast per consuming join)
-    val summary = batchSummary(changes, withPartitions = !isDelete,
-      withBucket = false, renderLeaves = !isDelete)
-    val ks = summary.map(_.keySet).getOrElse(keySet(changes, dedup = true))
+    val summary = batchSummary(rows, dropKeys, withPartitions = true, withBucket = false)
+    val ks = summary.map(_.keySet).getOrElse(keySet(unionKeys(rows, dropKeys), dedup = true))
     // leaf attribution from the file path Spark itself wrote — exact
     // by construction, one scan restricted to the batch's key set
     val holders: Set[String] =
@@ -2247,22 +2242,10 @@ final class MergeTable(
             "/((?:_graft_p_[^/]+/)+)[^/]+$", 1),
           "/$", "").as("_graft_leaf"))
         .distinct().collect().map(_.getString(0)).toSet
-    val affected = holders ++
-      (if (isDelete) Set.empty[String]
-      else summary.map(_.leaves).getOrElse(partitionLeafNames(changes)))
-    if (isDelete && affected.isEmpty) return // nothing held these keys
-    val affectedDirs = current.filter(e => affected.contains(leafOf(e._2)))
-    val base =
-      if (affectedDirs.isEmpty) None
-      else Some(readDirs(affectedDirs.map(_._2)))
-    val result =
-      if (isDelete) base.map(_.join(ks, keys, "left_anti")).getOrElse(return)
-      else base match {
-        case None => changes
-        case Some(b) =>
-          changes.unionByName(b.join(ks, keys, "left_anti"),
-            allowMissingColumns = true)
-      }
+    val affected = holders ++ summary.map(_.leaves)
+      .getOrElse(rows.map(leafNames(_, withBucket = false)).getOrElse(Set.empty))
+    if (affected.isEmpty) return // nothing lands and nothing held these keys
+    val result = scopedResult(rows, current.filter(e => affected.contains(leafOf(e._2))), ks)
     // disjoint-partition writers rebase instead of conflicting; unlike
     // buckets, partition dirs are value-addressed, so the rebase also
     // validates the winner added no rows for this batch's keys (a key
@@ -2272,6 +2255,17 @@ final class MergeTable(
       { case (t, d) => if (t == "pv") Some(leafOf(d)) else None },
       validateKeys = Some(ks))
     ()
+  }
+
+  /** A scoped COW merge's rewrite of its touched dirs: the landing
+    * `rows` plus the dirs' stored rows outside the key set `ks`.
+    */
+  private def scopedResult(rows: Option[DataFrame],
+      touched: Seq[(String, String)], ks: DataFrame): DataFrame = {
+    val keep =
+      if (touched.isEmpty) None
+      else Some(readDirs(touched.map(_._2)).join(ks, keys, "left_anti"))
+    (rows.toSeq ++ keep).reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   // -- composed (partitioned × bucketed) layout ------------------------------
@@ -2307,26 +2301,6 @@ final class MergeTable(
         .filter(_.startsWith(s"$BucketCol=")).toSeq.map(b => s"$rel/$b")
     }
 
-  /** The composed leaf names a batch's rows land in — the partition
-    * rendering of [[partitionLeafNames]] extended by the key-hash
-    * bucket. Bounded by the batch's distinct (partition, bucket)
-    * tuples.
-    */
-  private def composedLeafNames(df: DataFrame): Set[String] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    df.select(partitionCols.map(col) :+ bucketExpr.as(BucketCol): _*)
-      .distinct().collect().map { r =>
-        val parts = partitionCols.zipWithIndex.map { case (c, i) =>
-          val v = r.get(i)
-          val rendered =
-            if (v == null) "__HIVE_DEFAULT_PARTITION__"
-            else ExternalCatalogUtils.escapePathName(v.toString)
-          s"$PartPrefix$c=$rendered"
-        }.mkString("/")
-        s"$parts/$BucketCol=${r.getLong(partitionCols.size)}"
-      }.toSet
-  }
-
   /** Scoped COW merge on the composed layout: rewrite ONLY the
     * (partition × bucket) cells the batch touches. The holder scan —
     * the one key-restricted pass that catches partition moves — is
@@ -2358,8 +2332,8 @@ final class MergeTable(
         s"/((?:_graft_p_[^/]+/)+$BucketCol=\\d+)/[^/]+$$", 1).as("_graft_leaf"))
       .distinct().collect().map(_.getString(0)).toSet
 
-  private def composedMerge(changes: DataFrame, isDelete: Boolean): Unit = {
-    if (!isDelete) requirePartitionable(changes)
+  private def composedMerge(rows: Option[DataFrame], dropKeys: Option[DataFrame]): Unit = {
+    rows.foreach(requirePartitionable)
     val current = entries()
     require(current.forall(e => e._1 == "pb" || e._1 == "ing"),
       s"table at $root has a non-composed layout; migrate before opening " +
@@ -2369,30 +2343,17 @@ final class MergeTable(
     // cell names (the old path ran a probe count, a bucket collect and
     // a leaf collect — each re-evaluating the batch — plus a fresh
     // key-set broadcast build per consuming join)
-    val summary = batchSummary(changes, withPartitions = !isDelete,
-      withBucket = true, renderLeaves = !isDelete)
-    val ks = summary.map(_.keySet).getOrElse(keySet(changes, dedup = true))
-    val bs = summary.map(_.buckets).getOrElse(affectedBuckets(changes))
+    val summary = batchSummary(rows, dropKeys, withPartitions = true, withBucket = true)
+    val ks = summary.map(_.keySet).getOrElse(keySet(unionKeys(rows, dropKeys), dedup = true))
+    val bs = summary.map(_.buckets).getOrElse(affectedBuckets(unionKeys(rows, dropKeys)))
     val candidates = current.filter(e =>
       e._1 == "pb" && bucketIdOf(e._2).exists(bs.contains))
     val holders = composedHolders(candidates, ks)
-    val affected = holders ++
-      (if (isDelete) Set.empty[String]
-      else summary.map(_.leaves).getOrElse(composedLeafNames(changes)))
-    if (isDelete && affected.isEmpty) return // nothing held these keys
-    val affectedDirs = current.filter(e =>
-      e._1 == "pb" && affected.contains(scopeOf(e._2)))
-    val base =
-      if (affectedDirs.isEmpty) None
-      else Some(readDirs(affectedDirs.map(_._2)))
-    val result =
-      if (isDelete) base.map(_.join(ks, keys, "left_anti")).getOrElse(return)
-      else base match {
-        case None => changes
-        case Some(b) =>
-          changes.unionByName(b.join(ks, keys, "left_anti"),
-            allowMissingColumns = true)
-      }
+    val affected = holders ++ summary.map(_.leaves)
+      .getOrElse(rows.map(leafNames(_, withBucket = true)).getOrElse(Set.empty))
+    if (affected.isEmpty) return // nothing lands and nothing held these keys
+    val result = scopedResult(rows,
+      current.filter(e => e._1 == "pb" && affected.contains(scopeOf(e._2))), ks)
     // cell scopes are only HALF value-addressed: the bucket half is a
     // pure key hash, but a key concurrently upserted under ANOTHER
     // partition lands in a disjoint cell of the SAME bucket — so the
@@ -2419,7 +2380,7 @@ final class MergeTable(
     // one bounded collect serves the key set AND the bucket cut (see
     // batchSummary; the landing-cell collect below runs on `live`, a
     // different frame, so it stays its own job)
-    val summary = batchSummary(deltas, withPartitions = false, withBucket = true)
+    val summary = batchSummary(Some(deltas), None, withPartitions = false, withBucket = true)
     val ks = summary.map(_.keySet).getOrElse(keySet(deltas, dedup = true))
     val bs = summary.map(_.buckets).getOrElse(affectedBuckets(deltas))
     val candidates = pbEntries.filter(e => bucketIdOf(e._2).exists(bs.contains))
@@ -2429,7 +2390,7 @@ final class MergeTable(
         deltas.filter(!coalesce(col(Tombstone), lit(false)))
       else deltas
     val landing: Set[String] =
-      if (partitionCols.forall(live.columns.contains)) composedLeafNames(live)
+      if (partitionCols.forall(live.columns.contains)) leafNames(live, withBucket = true)
       else {
         // tombstone-only deltas carry no partition columns; a LIVE
         // row could only come from an upsert delta, type-gated to
@@ -2500,7 +2461,7 @@ final class MergeTable(
     val deltas = readDirs(deltaEntries.map(_._2))
     // one bounded collect replaces the key-set probe count and the
     // per-join broadcast rebuilds (see batchSummary)
-    val ks = batchSummary(deltas, withPartitions = false, withBucket = false)
+    val ks = batchSummary(Some(deltas), None, withPartitions = false, withBucket = false)
       .map(_.keySet).getOrElse(keySet(deltas, dedup = true))
     // old homes: leaf attribution from the file path Spark itself
     // wrote, one key-restricted scan of the partition bases
@@ -2520,7 +2481,7 @@ final class MergeTable(
         deltas.filter(!coalesce(col(Tombstone), lit(false)))
       else deltas
     val landing: Set[String] =
-      if (partitionCols.forall(live.columns.contains)) partitionLeafNames(live)
+      if (partitionCols.forall(live.columns.contains)) leafNames(live, withBucket = false)
       else {
         // tombstone-only deltas carry no partition columns; a LIVE
         // row could only come from an upsert delta, which the write
@@ -4107,59 +4068,69 @@ final class MergeTable(
     * (outranking same-key inserts), deletes remove keys (processBatch
     * structure, transaction_log_util.py:86-168). `ordering` are the
     * precombine columns (e.g. ts_ms); `metaCols` are envelope-only
-    * columns to drop from the stored rows.
+    * columns to drop from the stored rows. `opClasses` names the op
+    * classes the batch holds when the caller already knows them (a
+    * demux probe); otherwise one bounded aggregate finds them.
     *
-    * Every commit this makes is IDEMPOTENT (upsert of the same rows /
-    * delete of the same keys converges): a checkpoint-replayed
+    * The reference's stepwise append + MERGE + DELETE collapses into
+    * ONE [[replace]] commit: inserts ∪ upserts priority-precombine to
+    * one row per key (`merged`), and with `deleteKeys` the batch's D
+    * keys, the step lands the merged rows of keys outside `deleteKeys`
+    * in place of keys(merged) ∪ deleteKeys — exactly the old
+    * upsert-then-delete outcome. The commit is IDEMPOTENT (replacing
+    * the same keys by the same rows converges): a checkpoint-replayed
     * micro-batch — foreachBatch is at-least-once — reapplies to the
-    * identical table state instead of appending duplicate-PK rows.
+    * identical table state instead of appending duplicate-PK rows,
+    * which an append of the inserts would also do whenever a
+    * re-inserted key exists.
     */
-  // NOTE on labels: applyChanges commits exclusively through the
-  // nested upsert()/delete(), so its history rows read `upsert` /
-  // `delete` — accurate per commit (each commit IS one of those)
-  def applyChanges(batch: DataFrame, ordering: Seq[String], metaCols: Seq[String] = Nil): Unit =
-    applyChangesImpl(batch, ordering, metaCols)
-
-  private def applyChangesImpl(batch: DataFrame, ordering: Seq[String], metaCols: Seq[String]): Unit = {
+  // NOTE on labels: each non-empty batch is ONE commit labelled
+  // `apply-changes` in history (plus a `compact` when it triggers one)
+  def applyChanges(batch: DataFrame, ordering: Seq[String], metaCols: Seq[String] = Nil,
+      opClasses: Option[Set[String]] = None): Unit = withOp("apply-changes") {
+    val present = opClasses.getOrElse(
+      batch.groupBy("opclass").count().collect().map(_.getString(0)).toSet) // ≤ 3 rows
+    if (present.isEmpty) return
+    val hasRows = present.contains(CdcModel.OpInsert) || present.contains(CdcModel.OpUpsert)
+    val hasDeletes = present.contains(CdcModel.OpDelete)
     val drops = if (metaCols.nonEmpty) metaCols else ordering
-    if (!exists) {
-      // Fast path for a fresh table: the stepwise semantics (inserts,
-      // then upserts replacing matched keys, then deletes) collapse to
-      // one aggregation + one anti-join + ONE table write. Upserts
-      // outrank inserts for the same key regardless of timestamp —
-      // same outcome as the stepwise path.
-      val inserts = batch.filter(col("opclass") === CdcModel.OpInsert)
-        .drop("opclass").withColumn("_pri", lit(0))
-      val upserts = batch.filter(col("opclass") === CdcModel.OpUpsert)
-        .drop("opclass").withColumn("_pri", lit(1))
-      val deletes = batch.filter(col("opclass") === CdcModel.OpDelete)
-      val latest = Precombine.latestByKey(
-        inserts.unionByName(upserts, allowMissingColumns = true),
-        keys, "_pri" +: ordering).drop("_pri").drop(drops: _*)
-      val result = latest.join(
-        deletes.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      upsert(result)
-      return
+    // ONE aggregation per key: the winning insert/upsert row (an upsert
+    // outranks an insert, then the later `ordering` wins; a delete has
+    // no rank, and max_by skips null ranks) and whether the batch
+    // deletes the key. Rows and deleted keys both read it, so a query
+    // holding both (the summary, a MOR delta) shuffles the batch once,
+    // and no anti-join against the deletes is needed. Not persisted: a
+    // cached plan keeps spark.sql.shuffle.partitions output partitions
+    // (AQE may not coalesce it), so every write of a small batch would
+    // land that many tiny files.
+    val deleted = col("opclass") === CdcModel.OpDelete
+    val rank = when(col("opclass") === CdcModel.OpUpsert, 1)
+      .when(col("opclass") === CdcModel.OpInsert, 0)
+    val others = batch.columns.filterNot(c => keys.contains(c) || c == "opclass").toSeq
+    val perKey = batch.groupBy(keys.map(col): _*).agg(
+      max_by(struct(others.map(col): _*),
+        when(rank.isNotNull, struct(rank +: ordering.map(col): _*))).as("_row"),
+      max(deleted).as("_deleted"))
+    val deleteKeys = perKey.filter(col("_deleted")).select(keys.map(col): _*)
+    // a fresh table is seeded from the batch's rows even when none
+    // survive, so it exists with the batch's schema afterwards
+    val rows = if (!hasRows && exists) None else {
+      val merged = perKey.filter(col("_row").isNotNull)
+      val upserted = (m: DataFrame) =>
+        m.select(keys.map(col) ++ others.map(c => col(s"_row.$c").as(c)): _*).drop(drops: _*)
+      enforceConstraints(upserted(merged))
+      Some(withDerived(toPhysical(upserted(merged.filter(!coalesce(col("_deleted"), lit(false)))))))
     }
-    // Existing table: same combination as the fresh path (inserts ∪
-    // upserts priority-precombined → ONE upsert; deletes → one
-    // delete). Two idempotent commits instead of the reference's
-    // stepwise append+merge+delete: an append of inserts would
-    // duplicate PK rows on micro-batch replay AND whenever a
-    // re-inserted key already exists — upsert gives the same final
-    // state per key without either hazard.
-    val inserts = batch.filter(col("opclass") === CdcModel.OpInsert)
-      .drop("opclass").withColumn("_pri", lit(0))
-    val upserts = batch.filter(col("opclass") === CdcModel.OpUpsert)
-      .drop("opclass").withColumn("_pri", lit(1))
-    val deletes = batch.filter(col("opclass") === CdcModel.OpDelete)
-    val merged = Precombine.latestByKey(
-      inserts.unionByName(upserts, allowMissingColumns = true),
-      keys, "_pri" +: ordering).drop("_pri").drop(drops: _*)
-    if (!merged.isEmpty) upsert(merged)
-    if (!deletes.isEmpty)
-      delete(deletes.select(keys.map(col): _*))
+    replace(rows, if (hasDeletes) Some(deleteKeys) else None)
   }
+
+  /** The sink's changes mode: `rows` land and `dropKeys` (disjoint from
+    * keys(`rows`)) vanish in ONE labelled commit — see [[replace]].
+    */
+  private[graft] def replaceKeys(rows: Option[DataFrame], dropKeys: Option[DataFrame]): Unit =
+    withOp("apply-changes") {
+      replace(rows.map(landable), dropKeys.map(_.select(keys.map(col): _*)))
+    }
 }
 
 object MergeTable {

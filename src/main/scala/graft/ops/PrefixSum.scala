@@ -59,7 +59,8 @@ object PrefixSum {
     * [[runningTotal]] calls pay N range shuffles, N pinned caches and
     * N subtotal collect jobs; sharing the order they fuse into one of
     * each (guide §2.4: operations keyed the same way share one
-    * exchange). `valueCols` maps value column → output column.
+    * exchange). `valueCols` maps value column → output column; a
+    * null value adds 0.
     */
   def runningTotals(df: DataFrame, groupCol: String, orderCols: Seq[String],
                     valueCols: Seq[(String, String)]): DataFrame = {
@@ -70,8 +71,9 @@ object PrefixSum {
     // observe the SAME partitions (registered → harness unpersists)
     val pinned = graft.Caches.register(parts)
     // pass 1: per-(partition, group) subtotals of EVERY value column —
-    // P × |groups| rows, bounded by the shuffle partition count
-    val aggs = valueCols.map { case (v, _) => sum(col(v)).as(s"_sub_$v") }
+    // P × |groups| rows, bounded by the shuffle partition count. Null
+    // values count as 0 (an all-null subtotal is 0, not null)
+    val aggs = valueCols.map { case (v, _) => coalesce(sum(col(v)), lit(0L)).as(s"_sub_$v") }
     val rows = pinned
       .groupBy(spark_partition_id().as("_pid"), col(groupCol).as("_grp"))
       .agg(aggs.head, aggs.tail: _*)
@@ -109,7 +111,10 @@ object PrefixSum {
           while (i < accs.length) { accs(i) = if (off.isEmpty) 0L else off(i); i += 1 }
         }
         var i = 0
-        while (i < accs.length) { accs(i) += r.getLong(valueIdxs(i)); i += 1 }
+        while (i < accs.length) {
+          if (!r.isNullAt(valueIdxs(i))) accs(i) += r.getLong(valueIdxs(i))
+          i += 1
+        }
         // accs is reused across rows — copy the snapshot into the row
         Row.fromSeq(r.toSeq ++ accs.toList)
       }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.cdc.{MergeTable, Precombine}
+import graft.cdc.{CdcModel, MergeTable, Precombine}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.functions.col
@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions.col
   *    rows are precombined to one per key (by the `ordering` columns
   *    if given, else arbitrary-but-deterministic max) and MERGEd.
   *  - `changes`: rows are normalized change events carrying an
-  *    `opclass` column (I/U/D) — inserts and updates merge as keyed
-  *    upserts (precombined on `ordering`), deletes apply last.
+  *    `opclass` column (I/U/D), precombined on `ordering` to each
+  *    key's final event: a final D removes the key, any other lands
+  *    as a keyed upsert — one commit per batch.
   *
   * Exactly-once: MergeTable commits are atomic and the engine replays
   * a failed batch from the checkpoint; both apply modes are
@@ -69,26 +70,27 @@ class MergeTableSink(
     applyMode match {
       case "changes" =>
         // one precombine across ALL op classes decides each key's
-        // FINAL event by `ordering` — then losers of the same key
-        // are gone, a final D deletes, anything else upserts. (NOT
-        // applyChanges' append path: a checkpoint-replayed append
-        // would duplicate rows; and deletes must not be applied
-        // blindly after upserts or D-then-reinsert within one batch
-        // would lose the newer row.)
-        // Persist the POST-aggregation frame: every consumer below
-        // (two isEmpty probes, the merge join, the delete) would
-        // otherwise re-run the precombine shuffle per action.
+        // FINAL event by `ordering` — losers of the same key are gone,
+        // a final D drops the key, anything else lands. (NOT
+        // applyChanges' semantics: there deletes apply after upserts,
+        // so a D-then-reinsert within one batch would lose the newer
+        // row.) Upsert and delete keys are disjoint by construction,
+        // so both land in ONE replace commit. Persist the POST-
+        // aggregation frame: the op-class probe, the summary and the
+        // write would otherwise re-run the precombine shuffle each.
         val finalPerKey = Precombine.latestByKey(batch, keys, ordering).persist()
         try {
-          val upserts = finalPerKey.filter(col("opclass") =!= graft.cdc.CdcModel.OpDelete)
-            .drop("opclass").drop(ordering: _*)
-          if (!upserts.isEmpty) table.upsert(upserts)
-          val deletes = finalPerKey.filter(col("opclass") === graft.cdc.CdcModel.OpDelete)
+          val present = finalPerKey.groupBy("opclass").count()
+            .collect().map(_.getString(0)).toSet // ≤ 3 rows
+          val deleted = col("opclass") === CdcModel.OpDelete
+          val upserts = Some(finalPerKey.filter(!deleted).drop("opclass").drop(ordering: _*))
+            .filter(_ => present.exists(o => o != null && o != CdcModel.OpDelete))
           // deletes against a never-created table are a no-op (the
           // rows can't exist) — a delete-only first batch, e.g. from
           // a compacted topic's tombstones, must not crash the stream
-          if (!deletes.isEmpty && table.exists)
-            table.delete(deletes.select(keys.map(col): _*))
+          val deletes = Some(finalPerKey.filter(deleted))
+            .filter(_ => present.contains(CdcModel.OpDelete))
+          table.replaceKeys(upserts, deletes)
         } finally finalPerKey.unpersist()
       case _ =>
         // no ordering option → order by ALL non-key columns: an

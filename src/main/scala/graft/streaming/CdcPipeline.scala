@@ -11,15 +11,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (kafka-iceberg-streaming-emrserverless-v2.py:218-225,
   * transaction_log_util.py:55-168) re-expressed on MergeTable.
   *
-  * Scale notes: the per-batch `routes` collect is one tiny distinct
-  * (bounded by the table count, not the batch size — same shape as the
-  * reference's datatables.collect()). Each table's changes are then
-  * filtered from the cached batch and applied with one precombine +
-  * one merge join. Rate limiting (maxOffsetsPerTrigger-style) belongs
-  * on the source options. foreachBatch is at-least-once; end-to-end
-  * the loop is effectively-once because every commit applyChanges
-  * makes is idempotent (upsert/delete of the same batch converges),
-  * so a checkpoint-replayed batchId re-lands the identical state.
+  * Scale notes: each trigger probes the batch ONCE — a
+  * `groupBy(tbl, opclass).count()` over the cached parsed batch, at
+  * most three rows per table (bounded by the table count, not the
+  * batch size — the shape of the reference's datatables.collect()).
+  * It names the tables to apply and, per table, the op classes
+  * present, so an empty trigger, an upsert-only or a delete-only
+  * table costs no further probe. Each table's changes are then
+  * filtered from the cached batch, precombined, and land in ONE
+  * commit per table (see MergeTable.applyChanges).
+  * Rate limiting (maxOffsetsPerTrigger-style) belongs on the source
+  * options. foreachBatch is at-least-once; end-to-end the loop is
+  * effectively-once because each table's commit is idempotent
+  * (replacing the same keys by the same rows converges), so a
+  * checkpoint-replayed batchId re-lands the identical state.
   */
 final class CdcPipeline(
     spark: SparkSession,
@@ -28,16 +33,16 @@ final class CdcPipeline(
     configs: Seq[TableConfig],
     databaseName: String) {
 
-  /** Apply one normalized micro-batch: demux to (db, tbl) routes and
+  /** Apply one normalized micro-batch: demux to per-table routes and
     * fold each table's changes into its MergeTable.
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
     val parsed = parse(batch).filter(col("db") === databaseName).cache()
     try {
-      val routes = CdcModel.routes(parsed).collect() // bounded by table count
-      routes.foreach { r =>
-        val tbl = r.getString(1)
+      // bounded by 3 × table count
+      val routes = parsed.groupBy("tbl", "opclass").count().collect()
+        .groupMap(_.getString(0))(_.getString(1))
+      routes.foreach { case (tbl, opClasses) =>
         val conf = TableConfig.forTable(configs, databaseName, tbl)
         val changes = parsed.filter(col("tbl") === tbl)
         val schema = CdcModel.inferPayloadSchema(spark, changes, "payload")
@@ -45,7 +50,8 @@ final class CdcPipeline(
           CdcModel.decodePayload(changes, schema, keep = Seq("opclass", "ts_ms")), conf)
         val table = MergeTable.forConfig(spark, s"$tablesRoot/$databaseName/$tbl", conf)
         val ordering = "ts_ms" +: conf.precombineKey.toSeq
-        table.applyChanges(decoded, ordering = ordering, metaCols = Seq("ts_ms"))
+        table.applyChanges(decoded, ordering = ordering, metaCols = Seq("ts_ms"),
+          opClasses = Some(opClasses.toSet))
       }
     } finally parsed.unpersist()
   }

@@ -12,7 +12,11 @@ import org.apache.spark.sql.functions._
   *
   * Usage: `runMain graft.tools.StreamBench [nEvents] [nBatches]`
   * (defaults 1,000,000 × 1). Events are synthesized in-engine from
-  * `spark.range` — no dependence on testdata scale.
+  * `spark.range` — no dependence on testdata scale. Each batch is
+  * staged as [[FilesPerBatch]] files and the source reads that many
+  * files per trigger, so a batch is one trigger; the JSON line reports
+  * the triggers the query actually ran and their input rows (from
+  * `recentProgress`), not the staged batch count.
   *
   * `runMain graft.tools.StreamBench dedup [nDocs] [nBatches]`
   * measures the OTHER checkpointed ingest path instead:
@@ -23,6 +27,19 @@ import org.apache.spark.sql.functions._
   */
 object StreamBench {
   private val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+
+  /** Files each staged batch is written as — and the source's
+    * `maxFilesPerTrigger`, so one trigger reads exactly one batch.
+    */
+  private val FilesPerBatch = 8
+
+  /** `"triggers":…,"rows_per_trigger":[…]` JSON fields for the
+    * triggers that read input (a final empty trigger is not one).
+    */
+  private def triggerFields(q: org.apache.spark.sql.streaming.StreamingQuery): String = {
+    val rows = q.recentProgress.toSeq.map(_.numInputRows).filter(_ > 0)
+    s""""triggers":${rows.size},"rows_per_trigger":[${rows.mkString(",")}]"""
+  }
 
   private def session(): org.apache.spark.sql.SparkSession = {
     val s = graft.GraftSession.builder("graft-stream-bench", s"local[$cpus]")
@@ -71,7 +88,7 @@ object StreamBench {
         (col("id") % 1000).cast("double").as("value"),
         timestamp_seconds(lit(1700000000L) + col("id") % 86400).as("ts"))
     (0 until nBatches).foreach { b =>
-      Debezium.synthesizeFromEvents(events(b))
+      Debezium.synthesizeFromEvents(events(b)).repartition(FilesPerBatch)
         .write.mode("overwrite").text(s"$root/in/batch$b")
     }
 
@@ -88,7 +105,7 @@ object StreamBench {
     val task0 = taskMs.get()
     val t0 = System.nanoTime()
     val q = pipeline.start(
-      spark.readStream.schema("value STRING").option("maxFilesPerTrigger", "64")
+      spark.readStream.schema("value STRING").option("maxFilesPerTrigger", FilesPerBatch)
         .text(s"$root/in/*"),
       checkpoint = s"$root/ckpt")
     q.awaitTermination()
@@ -97,7 +114,7 @@ object StreamBench {
       new MergeTable(spark, s"$root/tables/graftdb/events_$i", Seq("user_id"))
         .read().count()
     }.sum
-    println(f"""{"metric":"stream_cdc_events_per_s","value":${n * nBatches / sec}%.0f,"unit":"events/s","events":${n * nBatches},"batches":$nBatches,"wall_sec":$sec%.1f,"task_total_sec":${(taskMs.get() - task0) / 1000.0}%.1f,"loadavg_start":$load0%.1f,"loadavg_end":${loadAvg()}%.1f,"cpus":"$cpus","rows_landed":$landed}""")
+    println(f"""{"metric":"stream_cdc_events_per_s","value":${n * nBatches / sec}%.0f,"unit":"events/s","events":${n * nBatches},"batches":$nBatches,${triggerFields(q)},"wall_sec":$sec%.1f,"task_total_sec":${(taskMs.get() - task0) / 1000.0}%.1f,"loadavg_start":$load0%.1f,"loadavg_end":${loadAvg()}%.1f,"cpus":"$cpus","rows_landed":$landed}""")
     spark.stop()
   }
 
@@ -128,6 +145,7 @@ object StreamBench {
       spark.range(n).select(
           gid.as("doc_id"),
           concat(lit("document text body "), md5(key.cast("string"))).as("text"))
+        .repartition(FilesPerBatch)
         .write.mode("overwrite").parquet(s"$root/in/batch$b")
     }
     val ds = new graft.streaming.DedupStream(spark, s"$root/tables")
@@ -136,13 +154,13 @@ object StreamBench {
     val t0 = System.nanoTime()
     val q = ds.start(
       spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "8").parquet(s"$root/in/*"),
+        .option("maxFilesPerTrigger", FilesPerBatch).parquet(s"$root/in/*"),
       checkpoint = s"$root/ckpt")
     q.awaitTermination()
     val sec = (System.nanoTime() - t0) / 1e9
     val accepted = new MergeTable(spark, s"$root/tables/accepted", Seq("doc_id"))
       .read().count()
-    println(f"""{"metric":"stream_dedup_docs_per_s","value":${n * nBatches / sec}%.0f,"unit":"docs/s","docs":${n * nBatches},"batches":$nBatches,"accepted":$accepted,"wall_sec":$sec%.1f,"task_total_sec":${(taskMs.get() - task0) / 1000.0}%.1f,"loadavg_start":$load0%.1f,"loadavg_end":${loadAvg()}%.1f,"cpus":"$cpus"}""")
+    println(f"""{"metric":"stream_dedup_docs_per_s","value":${n * nBatches / sec}%.0f,"unit":"docs/s","docs":${n * nBatches},"batches":$nBatches,${triggerFields(q)},"accepted":$accepted,"wall_sec":$sec%.1f,"task_total_sec":${(taskMs.get() - task0) / 1000.0}%.1f,"loadavg_start":$load0%.1f,"loadavg_end":${loadAvg()}%.1f,"cpus":"$cpus"}""")
     spark.stop()
   }
 }

@@ -53,4 +53,20 @@ class PrefixSumSpec extends SparkSpec {
     graft.Caches.clear()
     assert(got == (1L to 1000L))
   }
+
+  test("an all-null value column totals 0 instead of failing") {
+    val df = (1 to 200).map(i => (i % 3, i, Option.empty[Long], Option(i.toLong).filter(_ % 2 == 0)))
+      .toDF("g", "ord", "v", "w")
+    val got = PrefixSum.runningTotals(df, "g", Seq("ord"), Seq("v" -> "cv", "w" -> "cw"))
+      .select("g", "ord", "cv", "cw").collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    graft.Caches.clear()
+    assert(got.size == 200)
+    assert(got.values.forall(_._1 == 0L))
+    // nulls interleaved with values add 0: the window sum over the non-null ones
+    val expect = (1 to 200).map { i =>
+      (i % 3, i) -> (1 to i).filter(j => j % 3 == i % 3 && j % 2 == 0).map(_.toLong).sum
+    }.toMap
+    assert(got.map { case (k, v) => k -> v._2 } == expect)
+  }
 }
