@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row}
 
 /** Registry for DataFrames cached inside query builders.
   *
@@ -21,6 +21,22 @@ object Caches {
   def register(df: DataFrame): DataFrame = synchronized {
     live += df
     df.cache()
+  }
+
+  /** [[register]] `df` and materialize it with ONE job, the aggregate
+    * `agg +: aggs` over it. Returns `df` re-rooted on the cached data
+    * (`GraftSqlBridge.cachedRelation`), with the aggregate's row: a
+    * loop that builds round N+1 on the returned frame adds O(1) plan
+    * nodes per round instead of nesting round N's plan, and the planner
+    * still sees the partitioning the cache was filled with. The cache
+    * drops its RDD lineage once filled (`truncateCacheLineage`), so a
+    * round's tasks do not carry earlier rounds either.
+    */
+  def materialize(df: DataFrame, agg: Column, aggs: Column*): (DataFrame, Row) = {
+    val cached = register(df)
+    GraftSqlBridge.truncateCacheLineage(cached)
+    val row = cached.agg(agg, aggs: _*).head()
+    (GraftSqlBridge.cachedRelation(cached), row)
   }
 
   /** Run `hook` on every [[clear]] (for module-local cache maps). */

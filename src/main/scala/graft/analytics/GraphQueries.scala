@@ -306,104 +306,77 @@ object GraphQueries extends QueryModule {
   private val CoreK = 8
   private val PeelRounds = 3
 
-  /** One bounded k-core peel pass over a SYMMETRIC edge list
-    * (src_t, src_id, dst_t, dst_id): `rounds` unrolled rounds of
-    * "drop every node whose current degree < k", keeping an edge only
-    * while BOTH endpoints survive. Each round is one degree
-    * aggregation plus two semi-joins — all keys are (type, id)
-    * pairs, no row ever carries more than four small columns, so the
-    * shape is scale-invariant; the fixed unroll keeps the plan
-    * declarative and lets the oracle replay it round for round.
+  /** `rounds` rounds of the k-core peel over a SYMMETRIC edge list
+    * (src_t, src_id, dst_t, dst_id): each round drops every node whose
+    * current degree is < k, keeping an edge only while BOTH endpoints
+    * survive. Rounds past the fixpoint are the identity, so the loop
+    * stops there; the fixed count keeps the result declarative and lets
+    * the oracle replay it round for round.
     */
-  private[analytics] def peelCore(edges0: DataFrame, k: Int, rounds: Int): DataFrame = {
-    // CO-PARTITIONED on (src_t, src_id) — the key of every round's
-    // degree aggregation and src-side semi-join (guide §2.4) — cached
-    // and MATERIALIZED up front: only a materialized cache exposes
-    // its partitioning to the planner (checkpoints and unmaterialized
-    // caches report unknown partitioning under AQE). Each round's
-    // survivors are ALSO count()-materialized so the next round's
-    // degree aggregation plans exchange-free: the dst-side semi-join
-    // runs FIRST and the src-side one LAST (intersective filters —
-    // order cannot change the result), so survivors come out
-    // partitioned by (src_t, src_id) whether the alive side
-    // broadcasts (partitioning flows through) or shuffles.
-    var edges = graft.Caches.register(
-      edges0.repartition(col("src_t"), col("src_id")))
-    edges.count()
-    for (_ <- 1 to rounds) {
-      // alive attaches to BOTH endpoints — cache it or the degree
-      // aggregation runs twice per round
-      val alive = graft.Caches.register(edges.groupBy("src_t", "src_id")
-        .agg(count(lit(1)).as("d")).filter(col("d") >= k)
-        .select(col("src_t"), col("src_id")))
-      val aliveDst = alive.select(col("src_t").as("dst_t"), col("src_id").as("dst_id"))
-      edges = graft.Caches.register(
-        edges.join(aliveDst, Seq("dst_t", "dst_id"), "left_semi")
-          .join(alive, Seq("src_t", "src_id"), "left_semi"))
-      edges.count()
-    }
-    edges
-  }
+  private[analytics] def peelCore(edges0: DataFrame, k: Int, rounds: Int): DataFrame =
+    peel(edges0, k, rounds)._1
 
-  /** [[peelCore]] to the TRUE fixpoint: peel until the edge set stops
-    * changing, with a LOUD refusal past `maxRounds` strict-peel
-    * rounds: a deep cascade under-peeled by a fixed unroll silently
-    * over-reports the core, and at 100× scale a cascade can run
-    * arbitrarily deep. Peeling is MONOTONE (each round's semi-joins
-    * only remove edges, so next ⊆ edges), so COUNT equality alone
-    * proves the fixpoint — one O(1)-output count per round, no
-    * per-edge hashing or anti-join. Detecting convergence costs one
+  /** [[peelCore]] to the TRUE fixpoint, with a LOUD refusal past
+    * `maxRounds` strict-peel rounds: a deep cascade under-peeled by a
+    * fixed unroll silently over-reports the core, and at 100× scale a
+    * cascade can run arbitrarily deep. A round that changes nothing
+    * proves the fixpoint (see [[peel]]); detecting it costs one
     * identity round beyond the last strict peel, so the loop allows
-    * `maxRounds + 1` iterations: a cascade whose fixpoint lands at
-    * exactly `maxRounds` peels (the oracle's unroll depth) converges
-    * rather than throwing. `localCheckpoint` truncates the per-round
-    * lineage exactly as the LSS loop does — an iterative
-    * self-referencing plan grows exponentially otherwise.
+    * `maxRounds + 1` rounds: a cascade whose fixpoint lands at exactly
+    * `maxRounds` peels (the oracle's unroll depth) converges rather
+    * than throwing.
     */
   private[analytics] def peelCoreFixpoint(edges0: DataFrame, k: Int,
       maxRounds: Int = 40): DataFrame = {
-    // unlike [[peelCore]]'s bounded unroll, this while-loop MUST
-    // checkpoint each round: the logical plan of round N references
-    // round N-1 three times (degree agg + two semi-joins), so without
-    // plan truncation the tree grows 3^rounds-fold — cache
-    // substitution only trims the PHYSICAL plan, and a 40-round run
-    // OOMs the driver just WALKING the logical tree. The checkpoint
-    // hides the partitioning from the planner, so the co-partitioning
-    // trick peelCore uses does not apply here; the per-round counts
-    // are control flow, exactly as before.
-    var edges = edges0.localCheckpoint(true)
-    var n = edges.count()
-    var converged = n == 0L
-    var i = 0
-    while (!converged && i < maxRounds + 1) {
-      // alive feeds BOTH semi-joins — checkpoint it (node-sized) or
-      // the degree aggregation runs twice per round
-      val alive = edges.groupBy("src_t", "src_id")
-        .agg(count(lit(1)).as("d")).filter(col("d") >= k)
-        .select(col("src_t"), col("src_id")).localCheckpoint(true)
-      val aliveDst = alive.select(col("src_t").as("dst_t"), col("src_id").as("dst_id"))
-      val next = edges.join(alive, Seq("src_t", "src_id"), "left_semi")
-        .join(aliveDst, Seq("dst_t", "dst_id"), "left_semi")
-        .localCheckpoint(true)
-      val nextN = next.count()
-      converged = nextN == n || nextN == 0L
-      n = nextN
-      edges = next
-      i += 1
-    }
+    val (edges, converged) = peel(edges0, k, maxRounds + 1)
     require(converged,
       s"peelCoreFixpoint did not reach the peel fixpoint in $maxRounds rounds")
     edges
   }
 
-  /** k-core of the customer–supplier trade graph (the dense-subgraph
-    * primitive behind community cores, engagement tiers, and graph
-    * sparsification): after [[PeelRounds]] rounds of removing nodes
-    * with degree < [[CoreK]], the surviving nodes with their residual
-    * in-core degree. Cascades are the point — a customer losing its
-    * low-degree suppliers can itself drop under k the next round.
-    * Top-20 by (core degree, type, id), exact integers throughout.
+  /** The peel loop of [[peelCore]] and [[peelCoreFixpoint]]: at most
+    * `maxRounds` rounds, stopping at the first round that changes
+    * nothing. Returns the peeled edges and whether that round was
+    * reached.
+    *
+    * Node frontier: round i computes the alive set
+    * a_i = {u : deg(u) ≥ k in e_{i-1}} with e_i = e0 ⋉ a_i on both
+    * endpoints. The peel is MONOTONE (a_i ⊆ src(e_{i-1}) ⊆ a_{i-1}), so
+    * filtering the ORIGINAL edges by the latest alive set equals the
+    * chain of per-round semi-joins, and a round is one scan of the
+    * cached e0 plus one node-sized aggregate; no round writes an edge
+    * cache. Convergence: for a symmetric edge list every endpoint of
+    * e_{i-1} is one of its sources, so e_i = e_{i-1} exactly when
+    * |a_i| = |src(e_{i-1})|, and the round's degree aggregate yields
+    * both.
+    *
+    * e0 is CO-PARTITIONED on (src_t, src_id), the key of every round's
+    * degree aggregation (guide §2.4). Every cache is materialized and
+    * re-rooted ([[graft.Caches.materialize]]), so a round's plan has
+    * cache leaves, not the previous round's plan; the node-sized alive
+    * set broadcasts into both semi-joins, and e0's partitioning flows
+    * through to the next degree aggregation without an exchange.
     */
+  private def peel(edges0: DataFrame, k: Int, maxRounds: Int): (DataFrame, Boolean) = {
+    val (e0, _) = graft.Caches.materialize(
+      edges0.repartition(col("src_t"), col("src_id")), count(lit(1)))
+    var edges = e0
+    var converged = false
+    var i = 0
+    while (!converged && i < maxRounds) {
+      val (deg, n) = graft.Caches.materialize(
+        edges.groupBy("src_t", "src_id").agg((count(lit(1)) >= k).as("keep")),
+        count(lit(1)), count_if(col("keep")))
+      converged = n.getLong(0) == n.getLong(1)
+      val alive = deg.filter(col("keep")).select(col("src_t"), col("src_id"))
+      val aliveDst = alive.select(col("src_t").as("dst_t"), col("src_id").as("dst_id"))
+      edges = e0.join(aliveDst, Seq("dst_t", "dst_id"), "left_semi")
+        .join(alive, Seq("src_t", "src_id"), "left_semi")
+      i += 1
+    }
+    (edges, converged)
+  }
+
   private def tradeEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
     val ord = Tables.load(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
@@ -420,6 +393,14 @@ object GraphQueries extends QueryModule {
     fwd.unionAll(rev)
   }
 
+  /** k-core of the customer–supplier trade graph (the dense-subgraph
+    * primitive behind community cores, engagement tiers, and graph
+    * sparsification): after [[PeelRounds]] rounds of removing nodes
+    * with degree < [[CoreK]], the surviving nodes with their residual
+    * in-core degree. Cascades are the point — a customer losing its
+    * low-degree suppliers can itself drop under k the next round.
+    * Top-20 by (core degree, type, id), exact integers throughout.
+    */
   private def kcore(s: SparkSession, dir: String): DataFrame =
     peelCore(tradeEdges(s, dir), CoreK, PeelRounds)
       .groupBy(col("src_t").as("node_t"), col("src_id").as("node_id"))

@@ -17,8 +17,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *   1. range-repartition by (group, order…) — P ordered partitions,
   *      P sized by `spark.sql.shuffle.partitions`, each holding a
   *      contiguous slice of one-or-more groups;
-  *   2. one tiny aggregation of per-(partition, group) subtotals
-  *      (P × |groups| rows, collected — bounded by partition count);
+  *   2. one tiny aggregation of per-(partition, group) subtotals,
+  *      collected: a partition holds a contiguous (group, order…)
+  *      range, so only a group straddling a boundary appears in more
+  *      than one, about |groups| + P rows (refused past
+  *      [[MaxSubtotals]]);
   *   3. exclusive prefix offsets per (partition, group) broadcast
   *      back, and a partition-local running sum adds them in.
   *
@@ -30,6 +33,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * boundaries, never the order.
   */
 object PrefixSum {
+
+  /** Most per-(partition, group) subtotal rows the driver collects —
+    * each is a few longs, so this bounds the offset table at tens of
+    * MB. More means too many groups for a driver-side prefix.
+    */
+  private val MaxSubtotals = 1000000
 
   /** Adds `cumCol` = inclusive running sum of `valueCol` (long) within
     * each `groupCol` group, ordered by `orderCols` ascending.
@@ -63,7 +72,12 @@ object PrefixSum {
     * null value adds 0.
     */
   def runningTotals(df: DataFrame, groupCol: String, orderCols: Seq[String],
-                    valueCols: Seq[(String, String)]): DataFrame = {
+                    valueCols: Seq[(String, String)]): DataFrame =
+    runningTotals(df, groupCol, orderCols, valueCols, MaxSubtotals)
+
+  private[ops] def runningTotals(df: DataFrame, groupCol: String, orderCols: Seq[String],
+                                 valueCols: Seq[(String, String)],
+                                 maxSubtotals: Int): DataFrame = {
     val sortCols = (groupCol +: orderCols).map(col)
     val parts = df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
     // pin the physical partitioning: range boundaries come from
@@ -71,13 +85,17 @@ object PrefixSum {
     // observe the SAME partitions (registered → harness unpersists)
     val pinned = graft.Caches.register(parts)
     // pass 1: per-(partition, group) subtotals of EVERY value column —
-    // P × |groups| rows, bounded by the shuffle partition count. Null
-    // values count as 0 (an all-null subtotal is 0, not null)
+    // about |groups| + P rows, capped BEFORE they reach the driver.
+    // Null values count as 0 (an all-null subtotal is 0, not null)
     val aggs = valueCols.map { case (v, _) => coalesce(sum(col(v)), lit(0L)).as(s"_sub_$v") }
     val rows = pinned
       .groupBy(spark_partition_id().as("_pid"), col(groupCol).as("_grp"))
       .agg(aggs.head, aggs.tail: _*)
+      .limit(maxSubtotals + 1)
       .collect()
+    require(rows.length <= maxSubtotals,
+      s"PrefixSum: more than $maxSubtotals (partition, group) subtotals; " +
+        s"too many '$groupCol' groups for a driver-side running total")
     // exclusive prefixes per group over ascending partition id, one
     // vector of offsets per (partition, group)
     val offsets: Map[(Int, Any), List[Long]] = rows

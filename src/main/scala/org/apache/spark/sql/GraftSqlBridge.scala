@@ -14,6 +14,44 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  private def inMemoryRelation(df: DataFrame): (classic.SparkSession, execution.columnar.InMemoryRelation) = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val rel = ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .getOrElse(throw new IllegalArgumentException("the frame is not cached"))
+      .cachedRepresentation
+    (ds.sparkSession, rel)
+  }
+
+  /** Marks the cache of `df`, cached but not yet filled, to drop its
+    * RDD lineage once the first job fills it. The filled blocks are the
+    * data, so this writes no copy and adds no job. A loop that builds
+    * each round's cache on the last one needs it: with every cache
+    * keeping its lineage, a 100-round k-core peel overflowed the stack
+    * serializing its tasks.
+    */
+  def truncateCacheLineage(df: DataFrame): Unit =
+    inMemoryRelation(df)._2.cacheBuilder.cachedColumnBuffers.localCheckpoint()
+
+  /** A cached `df` re-rooted on its in-memory data: one `LogicalRDD`
+    * leaf over the cache scan, with the cache's statistics and the
+    * partitioning of the plan that filled it, so `df` must already be
+    * materialized. A plan built on it holds that leaf where `df`'s
+    * whole plan was. The `InMemoryRelation` itself would not do for a
+    * loop: plan descriptions print its cached plan (twice under AQE),
+    * so a chain of them doubles with every link, and under AQE it
+    * reports unknown partitioning even once materialized.
+    */
+  def cachedRelation(df: DataFrame): DataFrame = {
+    val (s, rel) = inMemoryRelation(df)
+    val filled = rel.cachedPlan match {
+      case a: execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val rdd = classic.Dataset.ofRows(s, rel).queryExecution.toRdd
+    classic.Dataset.ofRows(s, execution.LogicalRDD(rel.output, rdd, filled.outputPartitioning)(
+      s, Some(rel.computeStats())))
+  }
+
   def expression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 

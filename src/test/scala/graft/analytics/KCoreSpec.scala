@@ -88,4 +88,67 @@ class KCoreSpec extends SparkSpec {
       .groupBy("src_id").agg(count(lit(1)).as("d")).as[(Long, Long)].collect().toMap
     assert(a === b)
   }
+
+  // driver-side reference peel over Scala sets, one round per step
+  private def refRound(e: Set[(Long, Long)], k: Int): Set[(Long, Long)] = {
+    val alive = e.groupBy(_._1).collect { case (n, out) if out.size >= k => n }.toSet
+    e.filter { case (u, v) => alive(u) && alive(v) }
+  }
+
+  private def edgeSet(df: DataFrame): Set[(Long, Long)] =
+    df.select("src_id", "dst_id").as[(Long, Long)].collect().toSet
+
+  test("seeded random graphs peel exactly as a reference peel, round for round") {
+    val rnd = new scala.util.Random(4242)
+    var deepest = 0
+    for (k <- 2 to 4) {
+      // a sparse random graph (mean degree near k) with a random tree
+      // hanging off it, so cascades run several rounds deep
+      val n = 40
+      val core = for {
+        a <- 1L to n; b <- (a + 1) to n if rnd.nextDouble() < (k + 0.5) / n
+      } yield (a, b)
+      val tree = (n + 1 to n + 12).map(v => (rnd.nextInt(v - 1) + 1).toLong -> v.toLong)
+      val pairs = (core ++ tree).distinct
+      val g = sym(pairs)
+      val ref = pairs.flatMap { case (u, v) => Seq(u -> v, v -> u) }.toSet
+      val byRound = Iterator.iterate(ref)(refRound(_, k)).take(60).toVector
+      for (r <- 1 to 6)
+        assert(edgeSet(GraphQueries.peelCore(g, k, r)) === byRound(r), s"k=$k rounds=$r")
+      val depth = byRound.indices.find(i => byRound(i + 1) == byRound(i)).get
+      deepest = deepest max depth
+      assert(edgeSet(GraphQueries.peelCoreFixpoint(g, k)) === byRound(depth), s"k=$k fixpoint")
+      graft.Caches.clear()
+    }
+    assert(deepest > 3, "some graph must cascade past the 3-round unroll")
+  }
+
+  test("the peeled edges keep the edge list's co-partitioning") {
+    val peeled = GraphQueries.peelCore(deepTail, k = 2, rounds = 3)
+    assert(shuffles(peeled.groupBy("src_t", "src_id").count()) === 0,
+      "a per-source aggregation over the peel needs no exchange")
+    graft.Caches.clear()
+  }
+
+  // K4 + an n-link tail off node 4: with k=2 it dissolves one link a round
+  private def longTail(links: Int): DataFrame =
+    sym(clique ++ (4L +: (100L until 100L + links)).sliding(2).map(p => (p(0), p(1))))
+
+  test("the peel's analyzed plan does not grow with the round count") {
+    val g = longTail(40)
+    def planNodes(rounds: Int): Int = {
+      val n = GraphQueries.peelCore(g, k = 2, rounds).queryExecution.analyzed
+        .collect { case p => p }.size
+      graft.Caches.clear()
+      n
+    }
+    assert(planNodes(12) <= planNodes(3) + 2)
+  }
+
+  test("a 40-link tail reaches its fixpoint with maxRounds = 40") {
+    val fixed = GraphQueries.peelCoreFixpoint(longTail(40), k = 2, maxRounds = 40)
+      .select(col("src_id")).distinct().as[Long].collect().toSet
+    graft.Caches.clear()
+    assert(fixed === Set(1L, 2L, 3L, 4L))
+  }
 }

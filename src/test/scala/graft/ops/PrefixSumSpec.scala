@@ -69,4 +69,18 @@ class PrefixSumSpec extends SparkSpec {
     }.toMap
     assert(got.map { case (k, v) => k -> v._2 } == expect)
   }
+
+  test("too many (partition, group) subtotals are refused before the driver holds them") {
+    val df = frame()
+    val e = intercept[IllegalArgumentException] {
+      PrefixSum.runningTotals(df, "g", Seq("ord"), Seq("v" -> "cv"), maxSubtotals = 6)
+    }
+    graft.Caches.clear()
+    assert(e.getMessage.contains("subtotals"))
+    // 7 groups fit a cap of |groups| + P
+    val ok = PrefixSum.runningTotals(df, "g", Seq("ord"), Seq("v" -> "cv"), maxSubtotals = 7 + 4)
+      .count()
+    graft.Caches.clear()
+    assert(ok == 1000)
+  }
 }
