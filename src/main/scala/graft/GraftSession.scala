@@ -8,6 +8,23 @@ import org.apache.spark.sql.SparkSession
   * scale-readiness: AQE handles runtime coalescing/skew, shuffle
   * partition count is sized for the local harness but meant to be
   * overridden (`spark.sql.shuffle.partitions`) on a real cluster.
+  *
+  * Generated-code cache: Spark keeps every class janino compiled for
+  * whole-stage codegen in one JVM-wide LRU keyed by `(context class
+  * loader, source)`. Under `local[N]` the driver's compile check and
+  * the executor threads run under different class loaders, so a class
+  * takes two entries. Spark's default of 100 entries (about 50 classes)
+  * is smaller than the five batch_ops ops need, so the LRU evicted
+  * their classes on every pass and janino recompiled them on both sides
+  * (663 compiles and 11.4 s of janino in one 20 s run on a 4-core VM).
+  * With 1000 entries, and the two class-name and class-loader settings
+  * below, that run compiles 156 entries in all, none in its timed ops.
+  * One `graft.Verify` pass over all 246 queries at sf0.01 compiles
+  * 3,344 times, an upper bound on the entries every query together
+  * could use; 1000 holds any one workload's working set, not all of
+  * graft's at once. The setting is static: it is read once, when the
+  * `CodeGenerator` object is first used, so it takes effect because
+  * every entry point builds its session here before it runs a query.
   */
 object GraftSession {
   def builder(appName: String = "graft", master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"): SparkSession.Builder =
@@ -47,6 +64,18 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000") // see the object doc
+      // AQE numbers whole-stage codegen stages in the order it plans
+      // query stages, which follows stage completion order, so two
+      // runs of one op can number a stage differently; with the id in
+      // the generated class name that is a new source and a recompile
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      // every cache fill runs in a clone of the session (the
+      // CacheManager's AQE-off copy), and with per-session artifact
+      // isolation each clone gets its own executor class loader, so a
+      // cached plan was recompiled on the executors on every run;
+      // graft adds no session artifacts, so sessions share one loader
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def getOrCreate(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()

@@ -4124,11 +4124,13 @@ final class MergeTable(
     replace(rows, if (hasDeletes) Some(deleteKeys) else None)
   }
 
-  /** The sink's changes mode: `rows` land and `dropKeys` (disjoint from
-    * keys(`rows`)) vanish in ONE labelled commit — see [[replace]].
+  /** The sink's changes mode and general SQL MERGE: `rows` land and
+    * `dropKeys` (disjoint from keys(`rows`)) vanish in ONE commit
+    * labelled `op` — see [[replace]].
     */
-  private[graft] def replaceKeys(rows: Option[DataFrame], dropKeys: Option[DataFrame]): Unit =
-    withOp("apply-changes") {
+  private[graft] def replaceKeys(rows: Option[DataFrame], dropKeys: Option[DataFrame],
+      op: String = "apply-changes"): Unit =
+    withOp(op) {
       replace(rows.map(landable), dropKeys.map(_.select(keys.map(col): _*)))
     }
 }

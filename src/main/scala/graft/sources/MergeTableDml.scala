@@ -543,18 +543,23 @@ case class MergeTableDmlCommand(
       case MergeTableDmlCommand.Apply =>
         // general MERGE: rows routed by `_op` (see generalMerge).
         // localCheckpoint: the routing plan embeds the CURRENT target
-        // snapshot — materialize it once so the upsert commit can't
-        // change what the delete pass reads, and the cardinality
-        // check, upsert, and delete don't re-run the joins
+        // snapshot — materialize it once so the cardinality check, the
+        // probe and the write don't re-run the joins
         val all = src.filter(col(MergeTableDmlCommand.OpCol) =!=
           MergeTableDmlCommand.OpKeep).localCheckpoint()
         requireUniqueKeys(all)
+        val present = all.groupBy(MergeTableDmlCommand.OpCol).count()
+          .collect().map(_.getString(0)).toSet // ≤ 2 rows: U, D
         val ups = all.filter(col(MergeTableDmlCommand.OpCol) ===
           MergeTableDmlCommand.OpUpsert).drop(MergeTableDmlCommand.OpCol)
         val dels = all.filter(col(MergeTableDmlCommand.OpCol) ===
-          MergeTableDmlCommand.OpDelete).select(keys.map(col): _*)
-        if (!ups.isEmpty) t.upsert(ups)
-        if (!dels.isEmpty) t.delete(dels)
+          MergeTableDmlCommand.OpDelete)
+        // the cardinality check makes the two key sets disjoint, so
+        // the upserts and the deletes land in ONE commit
+        val (hasUps, hasDels) = (present(MergeTableDmlCommand.OpUpsert),
+          present(MergeTableDmlCommand.OpDelete))
+        t.replaceKeys(Option.when(hasUps)(ups), Option.when(hasDels)(dels),
+          op = if (hasUps && hasDels) "merge" else if (hasUps) "upsert" else "delete")
     }
     Seq.empty
   }

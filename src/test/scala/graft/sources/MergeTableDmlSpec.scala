@@ -281,6 +281,48 @@ class MergeTableDmlSpec extends SparkSpec {
       Seq((1L, "x", 15L), (2L, "x", 30L), (3L, "z", 99L)))
   }
 
+  test("general MERGE lands update, delete and insert in ONE commit") {
+    // matched update + matched delete + not-matched insert: the keys
+    // are disjoint, so one replace step lands them; a twin table
+    // replays the former two-commit form (upsert, then delete)
+    val layouts = Seq(
+      ("one_cow", MergeTable.CopyOnWrite, None, Nil),
+      ("one_mor", MergeTable.MergeOnRead, None, Nil),
+      ("one_dv", MergeTable.DeletionVectors, None, Nil),
+      ("one_bucketed", MergeTable.CopyOnWrite, Some(4), Nil),
+      ("one_partitioned", MergeTable.CopyOnWrite, None, Seq("name")))
+    val init = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
+    Seq((1L, "A1", 100L, "U"), (2L, "x", 0L, "D"), (4L, "d", 40L, "U"))
+      .toDF("id", "name", "v", "op").createOrReplaceTempView("one_src")
+    for ((name, mode, buckets, partitions) <- layouts) {
+      def table(suffix: String): MergeTable = {
+        val root = s"target/test_tables/dml_${name}_$suffix"
+        MergeTable.drop(root)
+        MergeTable.createIfAbsent(spark, root, Seq("id"),
+          initial = Some(init.toDF("id", "name", "v")),
+          mode = mode, numBuckets = buckets, partitionCols = partitions)
+      }
+      val t = table("sql")
+      val before = t.versions().size
+      view(t.root, "one_target")
+      spark.sql(
+        """MERGE INTO one_target t USING one_src s ON t.id = s.id
+          |WHEN MATCHED AND s.op = 'D' THEN DELETE
+          |WHEN MATCHED THEN UPDATE SET name = s.name, v = s.v
+          |WHEN NOT MATCHED THEN INSERT (id, name, v)
+          |  VALUES (s.id, s.name, s.v)""".stripMargin)
+      assert(t.versions().size === before + 1, name)
+      assert(t.history().last._5 === "merge", name)
+      val twin = table("twin")
+      twin.upsert(Seq((1L, "A1", 100L), (4L, "d", 40L)).toDF("id", "name", "v"))
+      twin.delete(Seq(2L).toDF("id"))
+      def rows(m: MergeTable) = m.read().select("id", "name", "v")
+        .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
+      assert(rows(t) === rows(twin), name)
+      assert(rows(t) === Seq((1L, "A1", 100L), (3L, "c", 30L), (4L, "d", 40L)), name)
+    }
+  }
+
   test("general merge compiles to ONE join — no branch-per-clause union") {
     import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Union}
     val (root, _) = freshTable("merge_one_join")
