@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Generated-code cache: Spark keeps every class janino compiled for
   * whole-stage codegen in one JVM-wide LRU keyed by `(context class
-  * loader, source)`. Under `local[N]` the driver's compile check and
-  * the executor threads run under different class loaders, so a class
+  * loader, source)`. Under `local[N]` the planning thread's compile check
+  * and the executor threads run under different class loaders, so a class
   * takes two entries. Spark's default of 100 entries (about 50 classes)
   * is smaller than the five batch_ops ops need, so the LRU evicted
   * their classes on every pass and janino recompiled them on both sides

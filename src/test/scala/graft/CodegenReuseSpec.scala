@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions.{col, lit, sum}
 /** Generated code is compiled once and then served from Spark's
   * codegen cache, which `GraftSession.builder` sizes to graft's working
   * set. Compiles are counted with the JVM-wide
-  * janino timer, which records one sample per cache miss on the driver
-  * or an executor thread.
+  * janino timer, which records one sample per cache miss on the planning
+  * thread or an executor thread.
   */
 class CodegenReuseSpec extends SparkSpec {
   private def compiles(body: => Unit): Long = {
@@ -19,7 +19,7 @@ class CodegenReuseSpec extends SparkSpec {
   test("80 distinct plans compile once: the cache outgrows Spark's default") {
     // each plan inlines `i` into both of its whole-stage classes (the
     // partial aggregate and the final one), and each class takes one
-    // entry under the driver's class loader and one under the
+    // entry under the planning thread's class loader and one under the
     // executor's: 320 entries, past the default of 100
     def pass(): Unit = (1 to 80).foreach { i =>
       spark.range(0, 64, 1, 2).select((col("id") * i).as("x"))
