@@ -31,11 +31,23 @@ object Caches {
     * still sees the partitioning the cache was filled with. The cache
     * drops its RDD lineage once filled (`truncateCacheLineage`), so a
     * round's tasks do not carry earlier rounds either.
+    *
+    * The probe runs with adaptive execution OFF
+    * (`GraftSqlBridge.aggregateOnce`). Under AQE a cache fill is its
+    * own query stage and the aggregate's partial stage another, each
+    * submitted as a job before the result job: three jobs for one
+    * probe, where a job costs tens of ms of CPU outside its tasks and
+    * the data is small. Planned without AQE, the fill, the partial
+    * aggregate and the final one are stages of one job. Nothing
+    * adaptive is lost: the probe's output is one row, and the cache
+    * keeps the adaptive plan `df` was cached with, so exchanges inside
+    * `df` still run as their own stages and jobs with coalesced
+    * partitions.
     */
   def materialize(df: DataFrame, agg: Column, aggs: Column*): (DataFrame, Row) = {
     val cached = register(df)
     GraftSqlBridge.truncateCacheLineage(cached)
-    val row = cached.agg(agg, aggs: _*).head()
+    val row = GraftSqlBridge.aggregateOnce(cached, agg +: aggs)
     (GraftSqlBridge.cachedRelation(cached), row)
   }
 

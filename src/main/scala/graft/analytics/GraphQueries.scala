@@ -307,7 +307,10 @@ object GraphQueries extends QueryModule {
   private val PeelRounds = 3
 
   /** `rounds` rounds of the k-core peel over a SYMMETRIC edge list
-    * (src_t, src_id, dst_t, dst_id): each round drops every node whose
+    * whose first half of columns is the source node's key and second
+    * half the destination's, in the same order: (src, dst) for packed
+    * long keys as [[tradeEdges]] emits, or (src_t, src_id, dst_t,
+    * dst_id) for type-tagged ones. Each round drops every node whose
     * current degree is < k, keeping an edge only while BOTH endpoints
     * survive. Rounds past the fixpoint are the identity, so the loop
     * stops there; the fixed count keeps the result declarative and lets
@@ -337,7 +340,11 @@ object GraphQueries extends QueryModule {
   /** The peel loop of [[peelCore]] and [[peelCoreFixpoint]]: at most
     * `maxRounds` rounds, stopping at the first round that changes
     * nothing. Returns the peeled edges and whether that round was
-    * reached.
+    * reached. The node key is whatever the edge list's columns say
+    * (see [[peelCore]]); with one long per node, as [[kcore]] runs it,
+    * the edge cache is two long columns, both semi-joins probe a
+    * `LongHashedRelation` and the degree aggregate groups on a
+    * primitive key.
     *
     * Node frontier: round i computes the alive set
     * a_i = {u : deg(u) ≥ k in e_{i-1}} with e_i = e0 ⋉ a_i on both
@@ -350,33 +357,38 @@ object GraphQueries extends QueryModule {
     * |a_i| = |src(e_{i-1})|, and the round's degree aggregate yields
     * both.
     *
-    * e0 is CO-PARTITIONED on (src_t, src_id), the key of every round's
-    * degree aggregation (guide §2.4). Every cache is materialized and
-    * re-rooted ([[graft.Caches.materialize]]), so a round's plan has
-    * cache leaves, not the previous round's plan; the node-sized alive
-    * set broadcasts into both semi-joins, and e0's partitioning flows
-    * through to the next degree aggregation without an exchange.
+    * e0 is CO-PARTITIONED on the source key, the key of every round's
+    * degree aggregation (guide §2.4). Every cache is materialized, in
+    * one job each, and re-rooted ([[graft.Caches.materialize]]), so a
+    * round's plan has cache leaves, not the previous round's plan; the
+    * node-sized alive set broadcasts into both semi-joins, and e0's
+    * partitioning flows through to the next degree aggregation without
+    * an exchange.
     */
   private def peel(edges0: DataFrame, k: Int, maxRounds: Int): (DataFrame, Boolean) = {
+    val (src, dst) = edges0.columns.toSeq.splitAt(edges0.columns.length / 2)
     val (e0, _) = graft.Caches.materialize(
-      edges0.repartition(col("src_t"), col("src_id")), count(lit(1)))
+      edges0.repartition(src.map(col): _*), count(lit(1)))
     var edges = e0
     var converged = false
     var i = 0
     while (!converged && i < maxRounds) {
       val (deg, n) = graft.Caches.materialize(
-        edges.groupBy("src_t", "src_id").agg((count(lit(1)) >= k).as("keep")),
+        edges.groupBy(src.map(col): _*).agg((count(lit(1)) >= k).as("keep")),
         count(lit(1)), count_if(col("keep")))
       converged = n.getLong(0) == n.getLong(1)
-      val alive = deg.filter(col("keep")).select(col("src_t"), col("src_id"))
-      val aliveDst = alive.select(col("src_t").as("dst_t"), col("src_id").as("dst_id"))
-      edges = e0.join(aliveDst, Seq("dst_t", "dst_id"), "left_semi")
-        .join(alive, Seq("src_t", "src_id"), "left_semi")
+      val alive = deg.filter(col("keep")).select(src.map(col): _*)
+      val aliveDst = alive.select(src.zip(dst).map { case (a, b) => col(a).as(b) }: _*)
+      edges = e0.join(aliveDst, dst, "left_semi").join(alive, src, "left_semi")
       i += 1
     }
     (edges, converged)
   }
 
+  /** The symmetric customer–supplier trade graph with one long per
+    * node: 2·custkey for a customer, 2·suppkey + 1 for a supplier
+    * (decoded by [[coreTop20]]).
+    */
   private def tradeEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
     val ord = Tables.load(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
@@ -384,14 +396,20 @@ object GraphQueries extends QueryModule {
     // twice, and pairs is the expensive stage (join + distinct over
     // lineitem) — the checkpoint dedupes it without a blocking job
     val pairs = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("su")).distinct()
+      .select((col("o_custkey").cast("long") * 2).as("c"),
+        (col("l_suppkey").cast("long") * 2 + 1).as("su")).distinct()
       .localCheckpoint(false)
-    val fwd = pairs.select(lit("c").as("src_t"), col("c").as("src_id"),
-      lit("s").as("dst_t"), col("su").as("dst_id"))
-    val rev = pairs.select(lit("s").as("src_t"), col("su").as("src_id"),
-      lit("c").as("dst_t"), col("c").as("dst_id"))
-    fwd.unionAll(rev)
+    pairs.select(col("c").as("src"), col("su").as("dst"))
+      .unionAll(pairs.select(col("su").as("src"), col("c").as("dst")))
   }
+
+  /** Top-20 nodes of a peeled [[tradeEdges]] graph by (core degree,
+    * type, id), with each packed key decoded to (node_t, node_id). */
+  private def coreTop20(peeled: DataFrame): DataFrame =
+    peeled.groupBy("src").agg(count(lit(1)).as("core_deg"))
+      .select(when((col("src") % 2) === 0, lit("c")).otherwise(lit("s")).as("node_t"),
+        shiftright(col("src"), 1).as("node_id"), col("core_deg"))
+      .orderBy(col("core_deg").desc, col("node_t"), col("node_id")).limit(20)
 
   /** k-core of the customer–supplier trade graph (the dense-subgraph
     * primitive behind community cores, engagement tiers, and graph
@@ -402,10 +420,7 @@ object GraphQueries extends QueryModule {
     * Top-20 by (core degree, type, id), exact integers throughout.
     */
   private def kcore(s: SparkSession, dir: String): DataFrame =
-    peelCore(tradeEdges(s, dir), CoreK, PeelRounds)
-      .groupBy(col("src_t").as("node_t"), col("src_id").as("node_id"))
-      .agg(count(lit(1)).as("core_deg"))
-      .orderBy(col("core_deg").desc, col("node_t"), col("node_id")).limit(20)
+    coreTop20(peelCore(tradeEdges(s, dir), CoreK, PeelRounds))
 
   /** The TRUE k-core via [[peelCoreFixpoint]]. Oracle soundness: the
     * SQL unrolls [[FixpointOracleRounds]] peel rounds; a round past
@@ -416,10 +431,7 @@ object GraphQueries extends QueryModule {
     * two can never silently diverge on a deeper cascade.
     */
   private def kcoreFixpoint(s: SparkSession, dir: String): DataFrame =
-    peelCoreFixpoint(tradeEdges(s, dir), CoreK, maxRounds = FixpointOracleRounds)
-      .groupBy(col("src_t").as("node_t"), col("src_id").as("node_id"))
-      .agg(count(lit(1)).as("core_deg"))
-      .orderBy(col("core_deg").desc, col("node_t"), col("node_id")).limit(20)
+    coreTop20(peelCoreFixpoint(tradeEdges(s, dir), CoreK, maxRounds = FixpointOracleRounds))
 
   private val FixpointOracleRounds = 10
 

@@ -2,7 +2,7 @@ package graft.cdc
 
 import graft.{QueryDef, QueryModule}
 import graft.tables.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CDC operator block: every capability of the reference pipeline,
@@ -40,11 +40,26 @@ object CdcQueries extends QueryModule {
     s"$tmpBase/${name}_${dir.replaceAll("[^a-zA-Z0-9.]", "_")}"
 
   // latest row per user among a filtered subset, ordered by (ts, event_id)
-  private def latestPerUser(df: DataFrame): DataFrame =
-    Precombine.latestByKey(
+  private def latestPerUser(df: DataFrame, withTs: Boolean = false): DataFrame = {
+    val latest = Precombine.latestByKey(
       df.select("user_id", "event_id", "event_type", "value", "ts"),
       Seq("user_id"), Seq("ts", "event_id"))
-      .select("user_id", "event_id", "event_type", "value")
+    if (withTs) latest else latest.select("user_id", "event_id", "event_type", "value")
+  }
+
+  /** The merge gates' two inputs: the latest row per user among the
+    * events before the cut (max(event_id) div 2), narrowed by
+    * `keepBase`, and among the events from the cut on. One max probe;
+    * each half is its own pruned scan of `events`, so nothing is
+    * cached and nothing needs unpersisting.
+    */
+  private def baseAndChanges(s: SparkSession, dir: String, keepBase: Column = lit(true),
+      withTs: Boolean = false): (DataFrame, DataFrame) = {
+    val ev = events(s, dir)
+    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
+    (latestPerUser(ev.filter(col("event_id") < cut && keepBase), withTs),
+      latestPerUser(ev.filter(col("event_id") >= cut), withTs))
+  }
 
   private val latestSqlTemplate =
     """SELECT user_id, event_id, event_type, value FROM (
@@ -137,19 +152,14 @@ object CdcQueries extends QueryModule {
   private def applyUpsertWith(variant: String, mode: String, buckets: Option[Int],
       compactAfter: Boolean = false, partitions: Seq[String] = Nil)(
       s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val root = tmpRoot(s"apply_upsert_$variant", dir)
     MergeTable.drop(root)
     val t = MergeTable.createIfAbsent(s, root, Seq("user_id"), initial = Some(base),
       mode = mode, numBuckets = buckets, partitionCols = partitions)
     t.upsert(changes)
     if (compactAfter) t.compact()
-    val out = t.read().select("user_id", "event_id", "event_type", "value").orderBy("user_id")
-    ev.unpersist()
-    out
+    t.read().select("user_id", "event_id", "event_type", "value").orderBy("user_id")
   }
 
   private def applyUpsert(s: SparkSession, dir: String): DataFrame =
@@ -263,10 +273,7 @@ object CdcQueries extends QueryModule {
     * oracle, so SQL and API paths are proven equivalent.
     */
   private def applyUpsertViaSql(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val root = tmpRoot("apply_upsert_via_sql", dir)
     MergeTable.drop(root)
     MergeTable.createIfAbsent(s, root, Seq("user_id"), initial = Some(base))
@@ -278,10 +285,8 @@ object CdcQueries extends QueryModule {
         |ON t.user_id = s.user_id
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    val out = new MergeTable(s, root, Seq("user_id")).read()
+    new MergeTable(s, root, Seq("user_id")).read()
       .select("user_id", "event_id", "event_type", "value").orderBy("user_id")
-    ev.unpersist()
-    out
   }
 
   /** `UPDATE t SET … WHERE p` — the fourth DML verb, compiled by
@@ -331,14 +336,10 @@ object CdcQueries extends QueryModule {
     * delete paths, and the read-modify arithmetic end to end.
     */
   private def applyMergeConditional(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
     // base excludes every 7th user so the NOT MATCHED clauses are
     // non-vacuous at every SF (at sf0.01+ all users are active in both
     // halves, so without the carve-out nothing would ever insert)
-    val base = latestPerUser(
-      ev.filter(col("event_id") < cut && col("user_id") % 7 =!= 3))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir, keepBase = col("user_id") % 7 =!= 3)
     val root = tmpRoot("apply_merge_conditional", dir)
     MergeTable.drop(root)
     MergeTable.createIfAbsent(s, root, Seq("user_id"), initial = Some(base))
@@ -351,10 +352,8 @@ object CdcQueries extends QueryModule {
         |WHEN MATCHED AND s.event_type = 'signup' THEN DELETE
         |WHEN MATCHED THEN UPDATE SET value = t.value + s.value
         |WHEN NOT MATCHED AND s.event_type <> 'signup' THEN INSERT *""".stripMargin)
-    val out = new MergeTable(s, root, Seq("user_id")).read()
+    new MergeTable(s, root, Seq("user_id")).read()
       .select("user_id", "event_id", "event_type", "value").orderBy("user_id")
-    ev.unpersist()
-    out
   }
 
   private val applyMergeConditionalSql =
@@ -392,10 +391,7 @@ object CdcQueries extends QueryModule {
     * target and assigned ones from the source expression.
     */
   private def applyUpsertPartialViaSql(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val root = tmpRoot("apply_upsert_partial", dir)
     MergeTable.drop(root)
     MergeTable.createIfAbsent(s, root, Seq("user_id"), initial = Some(base))
@@ -407,10 +403,8 @@ object CdcQueries extends QueryModule {
         |ON t.user_id = s.user_id
         |WHEN MATCHED THEN UPDATE SET value = s.value * 2
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    val out = new MergeTable(s, root, Seq("user_id")).read()
+    new MergeTable(s, root, Seq("user_id")).read()
       .select("user_id", "event_id", "event_type", "value").orderBy("user_id")
-    ev.unpersist()
-    out
   }
 
   private val applyUpsertPartialSql =
@@ -443,10 +437,7 @@ object CdcQueries extends QueryModule {
     * INSERT seed + MERGE all via SQL, read back via the catalog.
     */
   private def applyUpsertViaCatalog(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val tbl = "upsert_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gate")
     s.sql(s"DROP TABLE IF EXISTS graft.gate.$tbl")
@@ -460,10 +451,8 @@ object CdcQueries extends QueryModule {
               ON t.user_id = s.user_id
               WHEN MATCHED THEN UPDATE SET *
               WHEN NOT MATCHED THEN INSERT *""")
-    val out = s.table(s"graft.gate.$tbl")
+    s.table(s"graft.gate.$tbl")
       .select("user_id", "event_id", "event_type", "value").orderBy("user_id")
-    ev.unpersist()
-    out
   }
 
   /** LAYOUT MIGRATION mid-pipeline (r12): seed FLAT through the
@@ -477,10 +466,7 @@ object CdcQueries extends QueryModule {
     * identical answer the flat path would have.
     */
   private def applyUpsertMigrated(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val tbl = "migrate_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gate")
     s.sql(s"DROP TABLE IF EXISTS graft.gate.$tbl")
@@ -495,10 +481,8 @@ object CdcQueries extends QueryModule {
               ON t.user_id = s.user_id
               WHEN MATCHED THEN UPDATE SET *
               WHEN NOT MATCHED THEN INSERT *""")
-    val out = s.table(s"graft.gate.$tbl")
+    s.table(s"graft.gate.$tbl")
       .select("user_id", "event_id", "event_type", "value").orderBy("user_id")
-    ev.unpersist()
-    out
   }
 
   /** HIDDEN day-partitioning end to end (r12b): the table declares
@@ -512,14 +496,7 @@ object CdcQueries extends QueryModule {
     * changes the LAYOUT and nothing else.
     */
   private def applyUpsertHidden(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    def latestWithTs(df: DataFrame): DataFrame =
-      Precombine.latestByKey(
-        df.select("user_id", "event_id", "event_type", "value", "ts"),
-        Seq("user_id"), Seq("ts", "event_id"))
-    val base = latestWithTs(ev.filter(col("event_id") < cut))
-    val changes = latestWithTs(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir, withTs = true)
     val tbl = "hidden_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gate")
     s.sql(s"DROP TABLE IF EXISTS graft.gate.$tbl")
@@ -535,10 +512,8 @@ object CdcQueries extends QueryModule {
               ON t.user_id = s.user_id
               WHEN MATCHED THEN UPDATE SET *
               WHEN NOT MATCHED THEN INSERT *""")
-    val out = s.table(s"graft.gate.$tbl")
+    s.table(s"graft.gate.$tbl")
       .select("user_id", "event_id", "event_type", "value").orderBy("user_id")
-    ev.unpersist()
-    out
   }
 
   /** DYNAMIC partition overwrite through the catalog (r12): seed a
@@ -597,10 +572,7 @@ object CdcQueries extends QueryModule {
     * recomputes.
     */
   private def applyUpsertWapBranch(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val tbl = "wap_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft.gate")
     s.sql(s"DROP TABLE IF EXISTS graft.gate.$tbl")
@@ -621,10 +593,8 @@ object CdcQueries extends QueryModule {
     require(s.table(s"graft.gate.$tbl").count() == seeded,
       "WAP leak: main advanced during the audit window")
     s.sql(s"ALTER TABLE graft.gate.$tbl FAST FORWARD audit")
-    val out = s.table(s"graft.gate.$tbl")
+    s.table(s"graft.gate.$tbl")
       .select("user_id", "event_id", "event_type", "value").orderBy("user_id")
-    ev.unpersist()
-    out
   }
 
   /** ANALYZE gate (r12): seed a catalog table, `ANALYZE TABLE …
@@ -675,20 +645,15 @@ object CdcQueries extends QueryModule {
     * isolation, vacuum safety, clone-of-clone).
     */
   private def shallowCloneUpsert(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val srcRoot = tmpRoot("clone_src", dir)
     val dstRoot = tmpRoot("clone_dst", dir)
     MergeTable.drop(srcRoot); MergeTable.drop(dstRoot)
     MergeTable.createIfAbsent(s, srcRoot, Seq("user_id"), initial = Some(base))
     val c = MergeTable.shallowClone(s, srcRoot, dstRoot)
     c.upsert(changes)
-    val out = c.read().select("user_id", "event_id", "event_type", "value")
+    c.read().select("user_id", "event_id", "event_type", "value")
       .orderBy("user_id")
-    ev.unpersist()
-    out
   }
 
   /** Metadata-only aggregate pushdown through the catalog: count(*) /
@@ -1056,15 +1021,11 @@ object CdcQueries extends QueryModule {
       |ORDER BY user_id""".stripMargin
 
   private def sourceRead(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val root = tmpRoot("source_read", dir)
     MergeTable.drop(root)
     val t = MergeTable.createIfAbsent(s, root, Seq("user_id"), initial = Some(base))
     t.upsert(changes)
-    ev.unpersist()
     s.read.format("mergetable").option("path", root).load()
       .filter(col("event_type") =!= "error")
       .select("user_id", "event_id", "event_type", "value")
@@ -1099,19 +1060,14 @@ object CdcQueries extends QueryModule {
     * the I/U rows of the second commit (no deletes in this path).
     */
   private def changeFeed(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val root = tmpRoot("change_feed", dir)
     MergeTable.drop(root)
     val t = MergeTable.createIfAbsent(s, root, Seq("user_id"), initial = Some(base))
     t.upsert(changes)
-    val out = t.changesBetween(1, t.versions().max)
+    t.changesBetween(1, t.versions().max)
       .select("user_id", "event_id", "event_type", "value", "_change")
       .orderBy("user_id")
-    ev.unpersist()
-    out
   }
 
   /** Incremental materialized-view maintenance — the downstream
@@ -1129,10 +1085,7 @@ object CdcQueries extends QueryModule {
     * feed and the group keys.
     */
   private def incrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val root = tmpRoot("incremental_agg", dir)
     MergeTable.drop(root)
     val t = MergeTable.createIfAbsent(s, root, Seq("user_id"), initial = Some(base))
@@ -1148,15 +1101,13 @@ object CdcQueries extends QueryModule {
       sum(when(additive, lit(1L)).otherwise(lit(-1L))).as("dn"),
       sum(when(additive, dec).otherwise(-dec)).as("dv"))
     val zero = lit(0).cast("decimal(28,6)")
-    val out = agg0.join(deltas, Seq("event_type"), "full_outer")
+    agg0.join(deltas, Seq("event_type"), "full_outer")
       .select(col("event_type"),
         (coalesce(col("n0"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n_rows"),
         round((coalesce(col("v0"), zero) + coalesce(col("dv"), zero))
           .cast("double"), 3).as("total_value"))
       .filter(col("n_rows") > 0)
       .orderBy("event_type")
-    ev.unpersist()
-    out
   }
 
   private val incrementalAggSql =
@@ -1268,21 +1219,16 @@ object CdcQueries extends QueryModule {
     * oracle reconstructs each key's last operation relationally.
     */
   private def changeFeedReplay(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val root = tmpRoot("change_feed_replay", dir)
     MergeTable.drop(root)
     val t = MergeTable.createIfAbsent(s, root, Seq("user_id"), initial = Some(base))
     t.upsert(changes)
     t.delete(t.read().filter(col("user_id") % 7 === 0).select("user_id"))
-    val out = s.read.format("mergetable").option("path", root)
+    s.read.format("mergetable").option("path", root)
       .option("readChangeFeed", "true").load()
       .select("user_id", "event_id", "event_type", "value", "_change")
       .orderBy("user_id")
-    ev.unpersist()
-    out
   }
 
   /** The same per-version CDF surfaced through SQL: Delta's
@@ -1294,21 +1240,16 @@ object CdcQueries extends QueryModule {
     * end to end.
     */
   private def tableChangesSqlQuery(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).cache()
-    val cut = ev.agg(max("event_id")).head().getLong(0) / 2
-    val base = latestPerUser(ev.filter(col("event_id") < cut))
-    val changes = latestPerUser(ev.filter(col("event_id") >= cut))
+    val (base, changes) = baseAndChanges(s, dir)
     val root = tmpRoot("table_changes_sql", dir)
     MergeTable.drop(root)
     val t = MergeTable.createIfAbsent(s, root, Seq("user_id"), initial = Some(base))
     t.upsert(changes)
     t.delete(t.read().filter(col("user_id") % 7 === 0).select("user_id"))
-    val out = s.sql(
+    s.sql(
       s"""SELECT user_id, event_id, event_type, value, _change
          |FROM table_changes('$root', 0)
          |ORDER BY user_id""".stripMargin)
-    ev.unpersist()
-    out
   }
 
   private val changeFeedReplaySql =

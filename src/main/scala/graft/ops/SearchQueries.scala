@@ -84,50 +84,51 @@ object SearchQueries extends QueryModule {
   private val K1 = 1.2
   private val B = 0.75
 
-  /** Top-10 documents for a fixed keyword query under BM25
-    * (k1=1.2, b=0.75, rational idf). The corpus-side work is one
-    * word-count aggregation (doc lengths) plus a query-term-filtered
-    * (doc,term) aggregation — the filter cuts the token stream to the
-    * query vocabulary BEFORE any shuffle. df (|query| rows) and the
-    * N/avgdl scalars join back as broadcast aggregates. Per-term
-    * partial scores accumulate in decimal so the 3-term sum is
-    * order-independent, then a global top-10 via TakeOrdered.
-    */
   /** BM25 accumulator per matching document — (doc_id, acc DECIMAL).
-    * Shared by the standalone search query and the hybrid-RRF leg. */
+    * Shared by the standalone search query and the hybrid-RRF leg.
+    *
+    * Each document is tokenized ONCE into one narrow cached row:
+    * doc_id, its length dl = size(ws) and one
+    * tf_i = size(filter(ws, = term_i)) per query term. The query is a
+    * fixed handful of terms, so counting them inside the token array
+    * replaces the explode and the (doc, term) aggregation. One
+    * single-row aggregate over the rows yields n_docs, avgdl and every
+    * df_i; it broadcasts into a row-wise sum of the per-term parts,
+    * each cast to decimal(28,12) as the oracle does, so the sum is
+    * exact and order-independent. A term the document lacks has
+    * tf_i = 0 and an idf above 0 (df_i ≤ n_docs), so its part is
+    * exactly 0. size(null) = -1 and the dl > 0 filter drop token-less
+    * and null documents from every statistic; a document with no
+    * query term scores nothing and is dropped.
+    */
   private def bm25Scored(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
-    // tokenized ONCE per doc and cached: the old shape exploded the
-    // full token stream twice (doc-length aggregation + query-term
-    // counts), paying the regex tokenization — this query's dominant
-    // compute — twice
-    val toks = graft.Caches.register(
-      d.select(col("doc_id"), TextAnalysis.words(col("text")).as("ws")))
-    // doc length = token count, per ROW from the array — no explode,
-    // no aggregation shuffle at all; size(null)=-1 and the >0 filter
-    // reproduce the old explode's drop of token-less docs exactly
-    val dl = toks.select(col("doc_id"), size(col("ws")).cast("long").as("dl"))
-      .filter(col("dl") > 0)
-    // cut to the query vocabulary INSIDE the array, explode only the
-    // matches (the old shape exploded every token before filtering)
-    val qtf = toks.select(col("doc_id"),
-        explode(filter(col("ws"), t => t.isInCollection(QueryTerms))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val df = qtf.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = dl.agg(count(lit(1)).as("n_docs"),
-      (sum("dl").cast("double") / count(lit(1)).cast("double")).as("avgdl"))
-    val idf = (col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
-      (col("df").cast("double") + lit(0.5))
-    val norm = (col("tf").cast("double") * lit(K1 + 1.0)) /
-      (col("tf").cast("double") +
-        lit(K1) * (lit(1.0 - B) + lit(B) * (col("dl").cast("double") / col("avgdl"))))
-    qtf.join(broadcast(df), "term")
-      .join(dl, "doc_id")
+    val tf = QueryTerms.indices.map(i => col(s"tf_$i"))
+    val df = QueryTerms.indices.map(i => col(s"df_$i"))
+    val perDoc = graft.Caches.register(docs(s, dir)
+      .select(col("doc_id"), TextAnalysis.words(col("text")).as("ws"))
+      .select(col("doc_id") +: size(col("ws")).as("dl") +:
+        QueryTerms.zipWithIndex.map { case (t, i) => size(filter(col("ws"), _ === t)).as(s"tf_$i") }: _*)
+      .filter(col("dl") > 0))
+    val stats = perDoc.agg(count(lit(1)).as("n_docs"),
+      (sum("dl").cast("double") / count(lit(1)).cast("double")).as("avgdl") +:
+        QueryTerms.indices.map(i => count_if(tf(i) > 0).as(s"df_$i")): _*)
+    val lengthNorm = lit(K1) * (lit(1.0 - B) + lit(B) * (col("dl").cast("double") / col("avgdl")))
+    val parts = QueryTerms.indices.map { i =>
+      val idf = (col("n_docs").cast("double") - df(i).cast("double") + lit(0.5)) /
+        (df(i).cast("double") + lit(0.5))
+      val norm = (tf(i).cast("double") * lit(K1 + 1.0)) / (tf(i).cast("double") + lengthNorm)
+      (idf * norm).cast("decimal(28,12)")
+    }
+    perDoc.filter(tf.map(_ > 0).reduce(_ || _))
       .crossJoin(broadcast(stats))
-      .select(col("doc_id"), (idf * norm).cast("decimal(28,12)").as("part"))
-      .groupBy("doc_id").agg(sum("part").as("acc"))
+      .select(col("doc_id"), parts.reduce(_ + _).as("acc"))
   }
 
+  /** Top-10 documents for a fixed keyword query under BM25
+    * (k1=1.2, b=0.75, rational idf). The corpus is scored one row per
+    * document, with no shuffle of (doc, term) rows, then a global
+    * top-10 via TakeOrdered; see [[bm25Scored]].
+    */
   private def bm25Search(s: SparkSession, dir: String): DataFrame =
     bm25Scored(s, dir)
       .select(col("doc_id"), round(col("acc").cast("double"), 4).as("bm25"),

@@ -52,6 +52,20 @@ object GraftSqlBridge {
       s, Some(rel.computeStats())))
   }
 
+  /** The one-row aggregate `aggs` over `df`, planned in a session with
+    * adaptive execution off (`getOrCloneSessionWithConfigsOff`, the
+    * call Spark's `CacheManager` makes for every cache fill), so the
+    * scan, the partial aggregate and the final one are stages of ONE
+    * job; under AQE each exchange is a query stage submitted as its own
+    * job. A cache under `df` keeps the plan it was cached with.
+    */
+  def aggregateOnce(df: DataFrame, aggs: Seq[Column]): Row = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val s = classic.SparkSession.getOrCloneSessionWithConfigsOff(
+      ds.sparkSession, Seq(internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED))
+    classic.Dataset.ofRows(s, ds.agg(aggs.head, aggs.tail: _*).queryExecution.analyzed).head()
+  }
+
   def expression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 

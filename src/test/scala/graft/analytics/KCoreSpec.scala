@@ -98,7 +98,16 @@ class KCoreSpec extends SparkSpec {
   private def edgeSet(df: DataFrame): Set[(Long, Long)] =
     df.select("src_id", "dst_id").as[(Long, Long)].collect().toSet
 
+  // the same graph keyed by one long per node, packed as kcore packs a
+  // supplier (2·id + 1), and its peeled edges decoded back to ids
+  private def packed(g: DataFrame): DataFrame =
+    g.select((col("src_id") * 2 + 1).as("src"), (col("dst_id") * 2 + 1).as("dst"))
+
+  private def packedEdgeSet(df: DataFrame): Set[(Long, Long)] =
+    df.select(shiftright(col("src"), 1), shiftright(col("dst"), 1)).as[(Long, Long)].collect().toSet
+
   test("seeded random graphs peel exactly as a reference peel, round for round") {
+    // each graph runs twice: type-tagged and packed into one long per node
     val rnd = new scala.util.Random(4242)
     var deepest = 0
     for (k <- 2 to 4) {
@@ -111,13 +120,19 @@ class KCoreSpec extends SparkSpec {
       val tree = (n + 1 to n + 12).map(v => (rnd.nextInt(v - 1) + 1).toLong -> v.toLong)
       val pairs = (core ++ tree).distinct
       val g = sym(pairs)
+      val p = packed(g)
       val ref = pairs.flatMap { case (u, v) => Seq(u -> v, v -> u) }.toSet
       val byRound = Iterator.iterate(ref)(refRound(_, k)).take(60).toVector
-      for (r <- 1 to 6)
+      for (r <- 1 to 6) {
         assert(edgeSet(GraphQueries.peelCore(g, k, r)) === byRound(r), s"k=$k rounds=$r")
+        assert(packedEdgeSet(GraphQueries.peelCore(p, k, r)) === byRound(r),
+          s"packed k=$k rounds=$r")
+      }
       val depth = byRound.indices.find(i => byRound(i + 1) == byRound(i)).get
       deepest = deepest max depth
       assert(edgeSet(GraphQueries.peelCoreFixpoint(g, k)) === byRound(depth), s"k=$k fixpoint")
+      assert(packedEdgeSet(GraphQueries.peelCoreFixpoint(p, k)) === byRound(depth),
+        s"packed k=$k fixpoint")
       graft.Caches.clear()
     }
     assert(deepest > 3, "some graph must cascade past the 3-round unroll")
