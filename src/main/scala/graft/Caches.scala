@@ -23,32 +23,44 @@ object Caches {
     df.cache()
   }
 
-  /** [[register]] `df` and materialize it with ONE job, the aggregate
-    * `agg +: aggs` over it. Returns `df` re-rooted on the cached data
-    * (`GraftSqlBridge.cachedRelation`), with the aggregate's row: a
-    * loop that builds round N+1 on the returned frame adds O(1) plan
-    * nodes per round instead of nesting round N's plan, and the planner
-    * still sees the partitioning the cache was filled with. The cache
-    * drops its RDD lineage once filled (`truncateCacheLineage`), so a
-    * round's tasks do not carry earlier rounds either.
+  /** [[register]] `df` for a fill planned with adaptive execution OFF
+    * (`GraftSqlBridge.adaptiveOff`), marked to drop its RDD lineage
+    * once filled (`truncateCacheLineage`), so a round's tasks do not
+    * carry earlier rounds. The cache is not filled here: the first job
+    * that reads it fills it, so a [[materialize]] of a frame built on
+    * `df` fills both caches in its one job. Returns `df`; once filled,
+    * `GraftSqlBridge.cachedRelation` re-roots it.
     *
-    * The probe runs with adaptive execution OFF
-    * (`GraftSqlBridge.aggregateOnce`). Under AQE a cache fill is its
-    * own query stage and the aggregate's partial stage another, each
-    * submitted as a job before the result job: three jobs for one
-    * probe, where a job costs tens of ms of CPU outside its tasks and
-    * the data is small. Planned without AQE, the fill, the partial
-    * aggregate and the final one are stages of one job. Nothing
-    * adaptive is lost: the probe's output is one row, and the cache
-    * keeps the adaptive plan `df` was cached with, so exchanges inside
-    * `df` still run as their own stages and jobs with coalesced
-    * partitions.
+    * Under AQE a cache keeps an adaptive plan, and every exchange
+    * inside it is a query stage that AQE submits as its own job before
+    * the job that reads the cache. Planned without AQE, those exchanges
+    * are stages of the reading job. A job costs tens of ms of CPU
+    * outside its tasks and the data here is small; what is given up is
+    * AQE's partition coalescing and join re-planning inside the cached
+    * plan. Plans built on the cache still run adaptively.
+    */
+  def stage(df: DataFrame): DataFrame = {
+    val off = register(GraftSqlBridge.adaptiveOff(df))
+    GraftSqlBridge.truncateCacheLineage(off)
+    df
+  }
+
+  /** [[stage]] `df` and fill it with ONE job, the aggregate
+    * `agg +: aggs` over it, planned in the same AQE-off session
+    * (`GraftSqlBridge.aggregateOnce`; one session clone per call): the
+    * fill, every exchange inside `df`, the partial aggregate and the
+    * final one are stages of that job. Returns `df` re-rooted on the
+    * cached data (`GraftSqlBridge.cachedRelation`), with the
+    * aggregate's row: a loop that builds round N+1 on the returned
+    * frame adds O(1) plan nodes per round instead of nesting round N's
+    * plan, and the planner still sees the partitioning the cache was
+    * filled with.
     */
   def materialize(df: DataFrame, agg: Column, aggs: Column*): (DataFrame, Row) = {
-    val cached = register(df)
-    GraftSqlBridge.truncateCacheLineage(cached)
-    val row = GraftSqlBridge.aggregateOnce(cached, agg +: aggs)
-    (GraftSqlBridge.cachedRelation(cached), row)
+    val off = GraftSqlBridge.adaptiveOff(df)
+    stage(off)
+    val row = GraftSqlBridge.aggregateOnce(off, agg +: aggs)
+    (GraftSqlBridge.cachedRelation(df), row)
   }
 
   /** Run `hook` on every [[clear]] (for module-local cache maps). */

@@ -33,12 +33,10 @@ object GraphQueries extends QueryModule {
   private def pagerank(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
     val ord = Tables.load(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-    // LAZY checkpoint before symmetrizing: cuts the plan so the
-    // union's two arms share one join+distinct (same RDD → computed
-    // once), without the eager variant's extra blocking job
+    // the union's two arms plan the same join + distinct, so they
+    // share its exchange: the pairs are computed once
     val pairs = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("su")).distinct()
-      .localCheckpoint(false)
     val fwd = pairs.select(lit("c").as("src_t"), col("c").as("src_id"),
       lit("s").as("dst_t"), col("su").as("dst_id"))
     val rev = pairs.select(lit("s").as("src_t"), col("su").as("src_id"),
@@ -316,8 +314,8 @@ object GraphQueries extends QueryModule {
     * stops there; the fixed count keeps the result declarative and lets
     * the oracle replay it round for round.
     */
-  private[analytics] def peelCore(edges0: DataFrame, k: Int, rounds: Int): DataFrame =
-    peel(edges0, k, rounds)._1
+  private[analytics] def peelCore(edges0: DataFrame, k: Int, rounds: Int): Peeled =
+    peel(edges0, k, rounds)
 
   /** [[peelCore]] to the TRUE fixpoint, with a LOUD refusal past
     * `maxRounds` strict-peel rounds: a deep cascade under-peeled by a
@@ -330,83 +328,116 @@ object GraphQueries extends QueryModule {
     * than throwing.
     */
   private[analytics] def peelCoreFixpoint(edges0: DataFrame, k: Int,
-      maxRounds: Int = 40): DataFrame = {
-    val (edges, converged) = peel(edges0, k, maxRounds + 1)
-    require(converged,
+      maxRounds: Int = 40): Peeled = {
+    val peeled = peel(edges0, k, maxRounds + 1)
+    require(peeled.fixpointDegrees.isDefined,
       s"peelCoreFixpoint did not reach the peel fixpoint in $maxRounds rounds")
-    edges
+    peeled
   }
+
+  /** The end of a peel: the peeled edges and, when the loop reached
+    * the fixpoint, the degrees of its last round as (source key…,
+    * core_deg). That round left the edges as they were, so its degrees
+    * are each surviving node's degree in the peeled edges.
+    */
+  private[analytics] final case class Peeled(edges: DataFrame,
+      fixpointDegrees: Option[DataFrame]) {
+    /** (source key…, core_deg) of every node in the core: read off
+      * the fixpoint's degree cache, or aggregated over the edges when
+      * the round cap came first. */
+    def coreDegrees: DataFrame = fixpointDegrees.getOrElse(edgeDegrees(edges))
+  }
+
+  /** (source key…, core_deg) aggregated over a peeled edge list. */
+  private[analytics] def edgeDegrees(edges: DataFrame): DataFrame =
+    edges.groupBy(edges.columns.take(edges.columns.length / 2).map(col): _*)
+      .agg(count(lit(1)).as("core_deg"))
 
   /** The peel loop of [[peelCore]] and [[peelCoreFixpoint]]: at most
     * `maxRounds` rounds, stopping at the first round that changes
-    * nothing. Returns the peeled edges and whether that round was
-    * reached. The node key is whatever the edge list's columns say
+    * nothing. The node key is whatever the edge list's columns say
     * (see [[peelCore]]); with one long per node, as [[kcore]] runs it,
     * the edge cache is two long columns, both semi-joins probe a
     * `LongHashedRelation` and the degree aggregate groups on a
     * primitive key.
     *
-    * Node frontier: round i computes the alive set
-    * a_i = {u : deg(u) ≥ k in e_{i-1}} with e_i = e0 ⋉ a_i on both
-    * endpoints. The peel is MONOTONE (a_i ⊆ src(e_{i-1}) ⊆ a_{i-1}), so
-    * filtering the ORIGINAL edges by the latest alive set equals the
-    * chain of per-round semi-joins, and a round is one scan of the
-    * cached e0 plus one node-sized aggregate; no round writes an edge
-    * cache. Convergence: for a symmetric edge list every endpoint of
-    * e_{i-1} is one of its sources, so e_i = e_{i-1} exactly when
+    * Node frontier: round i computes each node's degree d in e_{i-1}
+    * and the alive set a_i = {u : d(u) ≥ k}, with e_i = e0 ⋉ a_i on
+    * both endpoints. The peel is MONOTONE (a_i ⊆ src(e_{i-1}) ⊆
+    * a_{i-1}), so filtering the ORIGINAL edges by the latest alive set
+    * equals the chain of per-round semi-joins, and a round is one scan
+    * of the cached e0 plus one node-sized aggregate; no round writes an
+    * edge cache. Convergence: for a symmetric edge list every endpoint
+    * of e_{i-1} is one of its sources, so e_i = e_{i-1} exactly when
     * |a_i| = |src(e_{i-1})|, and the round's degree aggregate yields
-    * both.
+    * both. That round's degrees are then the core degrees
+    * ([[Peeled]]), and e_i is never built.
     *
     * e0 is CO-PARTITIONED on the source key, the key of every round's
-    * degree aggregation (guide §2.4). Every cache is materialized, in
-    * one job each, and re-rooted ([[graft.Caches.materialize]]), so a
-    * round's plan has cache leaves, not the previous round's plan; the
-    * node-sized alive set broadcasts into both semi-joins, and e0's
-    * partitioning flows through to the next degree aggregation without
-    * an exchange.
+    * degree aggregation (guide §2.4), and filled by round 1's job
+    * ([[graft.Caches.stage]]). Each degree cache is filled in one job
+    * and re-rooted ([[graft.Caches.materialize]]), so a round's plan has
+    * cache leaves, not the previous round's plan. The degree cache is
+    * partitioned as e0 is, so the source-side semi-join runs partition
+    * to partition with no exchange, and only the destination side
+    * broadcasts the node-sized alive set: one broadcast per round.
+    * e0's partitioning flows through both to the next degree
+    * aggregation.
     */
-  private def peel(edges0: DataFrame, k: Int, maxRounds: Int): (DataFrame, Boolean) = {
+  private def peel(edges0: DataFrame, k: Int, maxRounds: Int): Peeled = {
     val (src, dst) = edges0.columns.toSeq.splitAt(edges0.columns.length / 2)
-    val (e0, _) = graft.Caches.materialize(
-      edges0.repartition(src.map(col): _*), count(lit(1)))
+    // the degree cache names its key apart from e0's: with e0's key
+    // attributes, its references in the semi-joins would be re-instanced
+    // with new ones and lose the partitioning they carry
+    val node = src.map("node_" + _)
+    val e0 = graft.Caches.stage(edges0.repartition(src.map(col): _*))
+    lazy val e0Filled = org.apache.spark.sql.GraftSqlBridge.cachedRelation(e0)
+    def on(keys: Seq[String]) =
+      keys.zip(node).map { case (e, a) => col(s"e.$e") === col(s"a.$a") }.reduce(_ && _)
     var edges = e0
-    var converged = false
+    var fixpoint: Option[DataFrame] = None
     var i = 0
-    while (!converged && i < maxRounds) {
+    while (fixpoint.isEmpty && i < maxRounds) {
       val (deg, n) = graft.Caches.materialize(
-        edges.groupBy(src.map(col): _*).agg((count(lit(1)) >= k).as("keep")),
-        count(lit(1)), count_if(col("keep")))
-      converged = n.getLong(0) == n.getLong(1)
-      val alive = deg.filter(col("keep")).select(src.map(col): _*)
-      val aliveDst = alive.select(src.zip(dst).map { case (a, b) => col(a).as(b) }: _*)
-      edges = e0.join(aliveDst, dst, "left_semi").join(alive, src, "left_semi")
+        edges.groupBy(src.zip(node).map { case (c, a) => col(c).as(a) }: _*)
+          .agg(count(lit(1)).as("d")),
+        count(lit(1)), count_if(col("d") >= k))
+      if (n.getLong(0) == n.getLong(1))
+        fixpoint = Some(deg.select(node.zip(src).map { case (a, c) => col(a).as(c) } :+
+          col("d").as("core_deg"): _*))
+      else {
+        // source side first: only the plan's first reference to the
+        // degree cache keeps its partitioning (a repeated leaf is
+        // re-instanced with new attributes)
+        val alive = deg.filter(col("d") >= k).select(node.map(col): _*).as("a")
+        edges = e0Filled.as("e").join(alive.hint("shuffle_hash"), on(src), "left_semi")
+          .join(broadcast(alive), on(dst), "left_semi")
+      }
       i += 1
     }
-    (edges, converged)
+    Peeled(edges, fixpoint)
   }
 
   /** The symmetric customer–supplier trade graph with one long per
     * node: 2·custkey for a customer, 2·suppkey + 1 for a supplier
-    * (decoded by [[coreTop20]]).
+    * (decoded by [[coreTop20]]). The union's two arms plan the same
+    * join and distinct, so they share its exchange.
     */
   private def tradeEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
     val ord = Tables.load(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-    // LAZY checkpoint before symmetrizing: the union scans pairs
-    // twice, and pairs is the expensive stage (join + distinct over
-    // lineitem) — the checkpoint dedupes it without a blocking job
     val pairs = li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .select((col("o_custkey").cast("long") * 2).as("c"),
         (col("l_suppkey").cast("long") * 2 + 1).as("su")).distinct()
-      .localCheckpoint(false)
     pairs.select(col("c").as("src"), col("su").as("dst"))
       .unionAll(pairs.select(col("su").as("src"), col("c").as("dst")))
   }
 
   /** Top-20 nodes of a peeled [[tradeEdges]] graph by (core degree,
-    * type, id), with each packed key decoded to (node_t, node_id). */
-  private def coreTop20(peeled: DataFrame): DataFrame =
-    peeled.groupBy("src").agg(count(lit(1)).as("core_deg"))
+    * type, id), from its (src, core_deg) rows ([[Peeled.coreDegrees]]),
+    * with each packed key decoded to (node_t, node_id). */
+  private[analytics] def coreTop20(coreDegrees: DataFrame): DataFrame =
+    coreDegrees
       .select(when((col("src") % 2) === 0, lit("c")).otherwise(lit("s")).as("node_t"),
         shiftright(col("src"), 1).as("node_id"), col("core_deg"))
       .orderBy(col("core_deg").desc, col("node_t"), col("node_id")).limit(20)
@@ -420,7 +451,7 @@ object GraphQueries extends QueryModule {
     * Top-20 by (core degree, type, id), exact integers throughout.
     */
   private def kcore(s: SparkSession, dir: String): DataFrame =
-    coreTop20(peelCore(tradeEdges(s, dir), CoreK, PeelRounds))
+    coreTop20(peelCore(tradeEdges(s, dir), CoreK, PeelRounds).coreDegrees)
 
   /** The TRUE k-core via [[peelCoreFixpoint]]. Oracle soundness: the
     * SQL unrolls [[FixpointOracleRounds]] peel rounds; a round past
@@ -431,7 +462,8 @@ object GraphQueries extends QueryModule {
     * two can never silently diverge on a deeper cascade.
     */
   private def kcoreFixpoint(s: SparkSession, dir: String): DataFrame =
-    coreTop20(peelCoreFixpoint(tradeEdges(s, dir), CoreK, maxRounds = FixpointOracleRounds))
+    coreTop20(peelCoreFixpoint(tradeEdges(s, dir), CoreK, maxRounds = FixpointOracleRounds)
+      .coreDegrees)
 
   private val FixpointOracleRounds = 10
 

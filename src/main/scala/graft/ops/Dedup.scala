@@ -229,12 +229,15 @@ object Dedup {
     graft.functions.GraftFunctions.register(spark)
     // cache: the signature subtree feeds both sides of the self-join,
     // and signatures are tiny (64 longs/doc) relative to their compute.
-    // Register the PRE-explode signatures — caching the exploded
+    // Cache the PRE-explode signatures — caching the exploded
     // buckets would copy every signature array 16x (once per band);
-    // the per-side posexplode over cached rows is trivial to recompute
-    val sigs = graft.Caches.register(docs
+    // the per-side posexplode over cached rows is trivial to recompute.
+    // Filled up front in one job: left lazy, each side of the self-join
+    // is a cache stage of its own, and AQE fills the cache with two jobs
+    val (sigs, _) = graft.Caches.materialize(docs
       .select(col(idCol).as("doc_id"),
-        call_function("graft_minhash_words", TextAnalysis.words(col(textCol))).as("sig")))
+        call_function("graft_minhash_words", TextAnalysis.words(col(textCol))).as("sig")),
+      count(lit(1)))
     val buckets = sigs
       .select(col("doc_id"), col("sig"), posexplode(lshBandKeys(col("sig"))).as(Seq("band", "key")))
     buckets.as("a").join(buckets.as("b"),

@@ -87,41 +87,57 @@ object SearchQueries extends QueryModule {
   /** BM25 accumulator per matching document — (doc_id, acc DECIMAL).
     * Shared by the standalone search query and the hybrid-RRF leg.
     *
-    * Each document is tokenized ONCE into one narrow cached row:
-    * doc_id, its length dl = size(ws) and one
-    * tf_i = size(filter(ws, = term_i)) per query term. The query is a
-    * fixed handful of terms, so counting them inside the token array
-    * replaces the explode and the (doc, term) aggregation. One
-    * single-row aggregate over the rows yields n_docs, avgdl and every
-    * df_i; it broadcasts into a row-wise sum of the per-term parts,
-    * each cast to decimal(28,12) as the oracle does, so the sum is
-    * exact and order-independent. A term the document lacks has
-    * tf_i = 0 and an idf above 0 (df_i ≤ n_docs), so its part is
-    * exactly 0. size(null) = -1 and the dl > 0 filter drop token-less
-    * and null documents from every statistic; a document with no
-    * query term scores nothing and is dropped.
+    * Each document is tokenized ONCE into one narrow cached row
+    * ([[bm25PerDoc]]). The cache is filled in one job whose aggregate
+    * row is the corpus statistics ([[bm25Stats]]: n_docs, avgdl and
+    * every df_i), and those values enter the row-wise score
+    * ([[bm25Acc]]) as literals: no second pass over the rows, and no
+    * broadcast. A document with no query term scores nothing and is
+    * dropped.
     */
-  private def bm25Scored(s: SparkSession, dir: String): DataFrame = {
-    val tf = QueryTerms.indices.map(i => col(s"tf_$i"))
-    val df = QueryTerms.indices.map(i => col(s"df_$i"))
-    val perDoc = graft.Caches.register(docs(s, dir)
-      .select(col("doc_id"), TextAnalysis.words(col("text")).as("ws"))
+  private[ops] def bm25Scored(d: DataFrame): DataFrame = {
+    val (perDoc, st) = graft.Caches.materialize(bm25PerDoc(d), bm25Stats.head, bm25Stats.tail: _*)
+    val stat = (i: Int) => lit(st.get(i))
+    perDoc.filter(QueryTerms.indices.map(i => col(s"tf_$i") > 0).reduce(_ || _))
+      .select(col("doc_id"),
+        bm25Acc(stat(0), stat(1).cast("double"), QueryTerms.indices.map(i => stat(2 + i))).as("acc"))
+  }
+
+  /** One row per document with at least one token: doc_id, its length
+    * dl = size(ws) and one tf_i = size(filter(ws, = term_i)) per query
+    * term. The query is a fixed handful of terms, so counting them
+    * inside the token array replaces an explode and a (doc, term)
+    * aggregation. size(null) = -1, so the dl > 0 filter drops
+    * token-less and null documents from every statistic.
+    */
+  private[ops] def bm25PerDoc(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), TextAnalysis.words(col("text")).as("ws"))
       .select(col("doc_id") +: size(col("ws")).as("dl") +:
         QueryTerms.zipWithIndex.map { case (t, i) => size(filter(col("ws"), _ === t)).as(s"tf_$i") }: _*)
-      .filter(col("dl") > 0))
-    val stats = perDoc.agg(count(lit(1)).as("n_docs"),
+      .filter(col("dl") > 0)
+
+  /** The corpus statistics over [[bm25PerDoc]] rows, in this order:
+    * n_docs, avgdl (null on an empty corpus) and df_i per query term. */
+  private[ops] val bm25Stats: Seq[Column] =
+    count(lit(1)).as("n_docs") +:
       (sum("dl").cast("double") / count(lit(1)).cast("double")).as("avgdl") +:
-        QueryTerms.indices.map(i => count_if(tf(i) > 0).as(s"df_$i")): _*)
-    val lengthNorm = lit(K1) * (lit(1.0 - B) + lit(B) * (col("dl").cast("double") / col("avgdl")))
-    val parts = QueryTerms.indices.map { i =>
-      val idf = (col("n_docs").cast("double") - df(i).cast("double") + lit(0.5)) /
+      QueryTerms.indices.map(i => count_if(col(s"tf_$i") > 0).as(s"df_$i"))
+
+  /** A [[bm25PerDoc]] row's score given the corpus statistics: the
+    * per-term parts, each cast to decimal(28,12) as the oracle does,
+    * summed row-wise, so the sum is exact and order-independent. A
+    * term the document lacks has tf_i = 0 and an idf above 0
+    * (df_i ≤ n_docs), so its part is exactly 0.
+    */
+  private[ops] def bm25Acc(nDocs: Column, avgdl: Column, df: Seq[Column]): Column = {
+    val lengthNorm = lit(K1) * (lit(1.0 - B) + lit(B) * (col("dl").cast("double") / avgdl))
+    QueryTerms.indices.map { i =>
+      val tf = col(s"tf_$i").cast("double")
+      val idf = (nDocs.cast("double") - df(i).cast("double") + lit(0.5)) /
         (df(i).cast("double") + lit(0.5))
-      val norm = (tf(i).cast("double") * lit(K1 + 1.0)) / (tf(i).cast("double") + lengthNorm)
+      val norm = (tf * lit(K1 + 1.0)) / (tf + lengthNorm)
       (idf * norm).cast("decimal(28,12)")
-    }
-    perDoc.filter(tf.map(_ > 0).reduce(_ || _))
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), parts.reduce(_ + _).as("acc"))
+    }.reduce(_ + _)
   }
 
   /** Top-10 documents for a fixed keyword query under BM25
@@ -130,7 +146,7 @@ object SearchQueries extends QueryModule {
     * top-10 via TakeOrdered; see [[bm25Scored]].
     */
   private def bm25Search(s: SparkSession, dir: String): DataFrame =
-    bm25Scored(s, dir)
+    bm25Scored(docs(s, dir))
       .select(col("doc_id"), round(col("acc").cast("double"), 4).as("bm25"),
         col("acc"))
       .orderBy(col("acc").desc, col("doc_id")).limit(10)
@@ -208,7 +224,7 @@ object SearchQueries extends QueryModule {
 
   private def hybridRrf(s: SparkSession, dir: String): DataFrame = {
     val lex = graft.plans.TopK.perKey(
-        bm25Scored(s, dir).withColumn("g", lit(1)), Seq("g"),
+        bm25Scored(docs(s, dir)).withColumn("g", lit(1)), Seq("g"),
         Seq(col("acc"), -col("doc_id")), FuseDepth, rankCol = "lex_rank")
       .select(col("doc_id"), col("lex_rank"))
     val emb = Tables.embeddings(s, dir)

@@ -61,7 +61,12 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame      = load(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "lineitem")
-  def events(spark: SparkSession, dir: String): DataFrame    = fixNanos(load(spark, dir, "events"), "ts")
+  // memoized like the base relations: a frame's `rdd` is planned once
+  // per Dataset, so `parallel(events(...))` plans it once per session
+  // instead of on every call
+  def events(spark: SparkSession, dir: String): DataFrame    =
+    relMemo.getOrElseUpdate((System.identityHashCode(spark), s"$dir/events.parquet#ts"),
+      fixNanos(load(spark, dir, "events"), "ts"))
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 }

@@ -53,17 +53,32 @@ object GraftSqlBridge {
   }
 
   /** The one-row aggregate `aggs` over `df`, planned in a session with
-    * adaptive execution off (`getOrCloneSessionWithConfigsOff`, the
-    * call Spark's `CacheManager` makes for every cache fill), so the
-    * scan, the partial aggregate and the final one are stages of ONE
-    * job; under AQE each exchange is a query stage submitted as its own
-    * job. A cache under `df` keeps the plan it was cached with.
+    * adaptive execution off, so the scan, the partial aggregate and the
+    * final one are stages of ONE job; under AQE each exchange is a
+    * query stage submitted as its own job. A `df` already in such a
+    * session ([[adaptiveOff]]) is planned in it as is, with no second
+    * clone. A cache under `df` fills with the plan it was cached with:
+    * in the same job when that plan is not adaptive either.
     */
   def aggregateOnce(df: DataFrame, aggs: Seq[Column]): Row = {
     val ds = df.asInstanceOf[classic.Dataset[_]]
     val s = classic.SparkSession.getOrCloneSessionWithConfigsOff(
       ds.sparkSession, Seq(internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED))
     classic.Dataset.ofRows(s, ds.agg(aggs.head, aggs.tail: _*).queryExecution.analyzed).head()
+  }
+
+  /** `df` in a clone of its session with adaptive execution off
+    * (`getOrCloneSessionWithConfigsOff`, the call Spark's
+    * `CacheManager` makes for every cache fill), or `df` itself when
+    * its session already has it off. A cache filled from the returned
+    * frame keeps a plan whose exchanges are stages of the job that
+    * fills it, not query stages that AQE submits as jobs of their own.
+    */
+  def adaptiveOff(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val s = classic.SparkSession.getOrCloneSessionWithConfigsOff(
+      ds.sparkSession, Seq(internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED))
+    if (s eq ds.sparkSession) df else classic.Dataset.ofRows(s, ds.queryExecution.analyzed)
   }
 
   def expression(c: Column): Expression =

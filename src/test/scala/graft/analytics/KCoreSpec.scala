@@ -28,7 +28,7 @@ class KCoreSpec extends SparkSpec {
   private val graph = sym(clique ++ Seq((4L, 5L), (5L, 6L)))
 
   private def survivors(rounds: Int): Set[Long] =
-    GraphQueries.peelCore(graph, k = 2, rounds = rounds)
+    GraphQueries.peelCore(graph, k = 2, rounds = rounds).edges
       .select(col("src_id")).distinct().as[Long].collect().toSet
 
   test("the peel cascades one chain link per round") {
@@ -38,7 +38,7 @@ class KCoreSpec extends SparkSpec {
   }
 
   test("core degrees are the residual in-core degrees") {
-    val deg = GraphQueries.peelCore(graph, k = 2, rounds = 3)
+    val deg = GraphQueries.peelCore(graph, k = 2, rounds = 3).edges
       .groupBy("src_id").agg(count(lit(1)).as("d"))
       .as[(Long, Long)].collect().toMap
     assert(deg === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L),
@@ -47,7 +47,7 @@ class KCoreSpec extends SparkSpec {
 
   test("a graph below k everywhere peels to empty") {
     val path = sym(Seq((1L, 2L), (2L, 3L)))
-    assert(GraphQueries.peelCore(path, k = 3, rounds = 2).count() === 0L)
+    assert(GraphQueries.peelCore(path, k = 3, rounds = 2).edges.count() === 0L)
   }
 
   // K4 + a 6-link tail: the cascade needs SIX rounds to dissolve, so
@@ -56,11 +56,11 @@ class KCoreSpec extends SparkSpec {
     Seq((4L, 10L), (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L), (14L, 15L)))
 
   test("round-4+ cascades change the answer and the fixpoint catches them") {
-    val unrolled = GraphQueries.peelCore(deepTail, k = 2, rounds = 3)
+    val unrolled = GraphQueries.peelCore(deepTail, k = 2, rounds = 3).edges
       .select(col("src_id")).distinct().as[Long].collect().toSet
     assert(unrolled === Set(1L, 2L, 3L, 4L, 10L, 11L, 12L),
       "3 rounds under-peel the deep tail")
-    val fixed = GraphQueries.peelCoreFixpoint(deepTail, k = 2)
+    val fixed = GraphQueries.peelCoreFixpoint(deepTail, k = 2).edges
       .select(col("src_id")).distinct().as[Long].collect().toSet
     assert(fixed === Set(1L, 2L, 3L, 4L), "the true 2-core is the clique alone")
   }
@@ -76,15 +76,15 @@ class KCoreSpec extends SparkSpec {
     // the 6-link tail dissolves in exactly 6 strict peel rounds; the
     // convergence-detection round must not count against the cap, or
     // the cap would not match the oracle's unroll depth
-    val fixed = GraphQueries.peelCoreFixpoint(deepTail, k = 2, maxRounds = 6)
+    val fixed = GraphQueries.peelCoreFixpoint(deepTail, k = 2, maxRounds = 6).edges
       .select(col("src_id")).distinct().as[Long].collect().toSet
     assert(fixed === Set(1L, 2L, 3L, 4L))
   }
 
   test("fixpoint equals the unrolled peel once the unroll is deep enough") {
-    val a = GraphQueries.peelCoreFixpoint(graph, k = 2)
+    val a = GraphQueries.peelCoreFixpoint(graph, k = 2).edges
       .groupBy("src_id").agg(count(lit(1)).as("d")).as[(Long, Long)].collect().toMap
-    val b = GraphQueries.peelCore(graph, k = 2, rounds = 3)
+    val b = GraphQueries.peelCore(graph, k = 2, rounds = 3).edges
       .groupBy("src_id").agg(count(lit(1)).as("d")).as[(Long, Long)].collect().toMap
     assert(a === b)
   }
@@ -124,22 +124,78 @@ class KCoreSpec extends SparkSpec {
       val ref = pairs.flatMap { case (u, v) => Seq(u -> v, v -> u) }.toSet
       val byRound = Iterator.iterate(ref)(refRound(_, k)).take(60).toVector
       for (r <- 1 to 6) {
-        assert(edgeSet(GraphQueries.peelCore(g, k, r)) === byRound(r), s"k=$k rounds=$r")
-        assert(packedEdgeSet(GraphQueries.peelCore(p, k, r)) === byRound(r),
+        assert(edgeSet(GraphQueries.peelCore(g, k, r).edges) === byRound(r), s"k=$k rounds=$r")
+        assert(packedEdgeSet(GraphQueries.peelCore(p, k, r).edges) === byRound(r),
           s"packed k=$k rounds=$r")
       }
       val depth = byRound.indices.find(i => byRound(i + 1) == byRound(i)).get
       deepest = deepest max depth
-      assert(edgeSet(GraphQueries.peelCoreFixpoint(g, k)) === byRound(depth), s"k=$k fixpoint")
-      assert(packedEdgeSet(GraphQueries.peelCoreFixpoint(p, k)) === byRound(depth),
+      assert(edgeSet(GraphQueries.peelCoreFixpoint(g, k).edges) === byRound(depth), s"k=$k fixpoint")
+      assert(packedEdgeSet(GraphQueries.peelCoreFixpoint(p, k).edges) === byRound(depth),
         s"packed k=$k fixpoint")
       graft.Caches.clear()
     }
     assert(deepest > 3, "some graph must cascade past the 3-round unroll")
   }
 
+  // a seeded random bipartite trade graph packed as tradeEdges packs it
+  // (2·id for a customer, 2·id + 1 for a supplier), with a random tree
+  // of customers hanging off it so some cascades run several rounds
+  private def randomTrade(rnd: scala.util.Random, k: Int): Seq[(Long, Long)] = {
+    val (cs, ss) = (40, 25)
+    val core = for {
+      c <- 1 to cs; s <- 1 to ss if rnd.nextDouble() < (k + 0.5) / ss
+    } yield (2L * c, 2L * s + 1)
+    val tree = (cs + 1 to cs + 10).map(c => (2L * c, 2L * (rnd.nextInt(ss) + 1) + 1))
+    (core ++ tree).distinct.flatMap { case (u, v) => Seq(u -> v, v -> u) }
+  }
+
+  private def top20(df: DataFrame): Seq[(String, Long, Long)] =
+    GraphQueries.coreTop20(df).as[(String, Long, Long)].collect().toSeq
+
+  // the reference top-20 of a driver-side peel's edges
+  private def refTop20(e: Set[(Long, Long)]): Seq[(String, Long, Long)] =
+    e.groupBy(_._1).toSeq.map { case (n, out) =>
+      (if (n % 2 == 0) "c" else "s", n >> 1, out.size.toLong)
+    }.sortBy { case (t, id, d) => (-d, t, id) }.take(20)
+
+  test("a converged peel's degree cache gives the edge path's top-20") {
+    val rnd = new scala.util.Random(977)
+    for (k <- 2 to 4; rounds <- Seq(3, 12)) {
+      val edges = randomTrade(rnd, k)
+      val g = edges.toDF("src", "dst")
+      val ref = Iterator.iterate(edges.toSet)(refRound(_, k)).drop(rounds).next()
+      val peeled = GraphQueries.peelCore(g, k, rounds)
+      if (rounds == 12) assert(peeled.fixpointDegrees.isDefined, s"k=$k reaches the fixpoint")
+      val viaDegrees = top20(peeled.coreDegrees)
+      assert(viaDegrees === top20(GraphQueries.edgeDegrees(peeled.edges)), s"k=$k rounds=$rounds")
+      assert(viaDegrees === refTop20(ref), s"k=$k rounds=$rounds")
+      graft.Caches.clear()
+    }
+  }
+
+  test("a peel that hits the round cap takes the edge path, and the fixpoint refuses it") {
+    // K_{3,3} between customers 1-3 and suppliers 1-3 (every degree 3)
+    // plus an alternating 6-link tail: with k = 2 it needs 6 rounds
+    val core = for (c <- 1L to 3L; s <- 1L to 3L) yield (2 * c, 2 * s + 1)
+    val tail = Seq(2L * 1 -> (2L * 10 + 1), (2L * 10 + 1) -> 2L * 11, 2L * 11 -> (2L * 11 + 1),
+      (2L * 11 + 1) -> 2L * 12, 2L * 12 -> (2L * 12 + 1), (2L * 12 + 1) -> 2L * 13)
+    val edges = (core ++ tail).flatMap { case (u, v) => Seq(u -> v, v -> u) }
+    val g = edges.toDF("src", "dst")
+    val peeled = GraphQueries.peelCore(g, 2, 3)
+    assert(peeled.fixpointDegrees.isEmpty, "3 rounds do not reach the fixpoint")
+    val ref = Iterator.iterate(edges.toSet)(refRound(_, 2)).drop(3).next()
+    assert(top20(peeled.coreDegrees) === refTop20(ref))
+    assert(ref.map(_._1).contains(2L * 11 + 1), "the under-peeled tail is still in the answer")
+    val e = intercept[IllegalArgumentException](GraphQueries.peelCoreFixpoint(g, 2, maxRounds = 3))
+    assert(e.getMessage.contains("fixpoint"))
+    val core2 = Iterator.iterate(edges.toSet)(refRound(_, 2)).drop(6).next()
+    assert(top20(GraphQueries.peelCoreFixpoint(g, 2, maxRounds = 6).coreDegrees) === refTop20(core2))
+    graft.Caches.clear()
+  }
+
   test("the peeled edges keep the edge list's co-partitioning") {
-    val peeled = GraphQueries.peelCore(deepTail, k = 2, rounds = 3)
+    val peeled = GraphQueries.peelCore(deepTail, k = 2, rounds = 3).edges
     assert(shuffles(peeled.groupBy("src_t", "src_id").count()) === 0,
       "a per-source aggregation over the peel needs no exchange")
     graft.Caches.clear()
@@ -152,7 +208,7 @@ class KCoreSpec extends SparkSpec {
   test("the peel's analyzed plan does not grow with the round count") {
     val g = longTail(40)
     def planNodes(rounds: Int): Int = {
-      val n = GraphQueries.peelCore(g, k = 2, rounds).queryExecution.analyzed
+      val n = GraphQueries.peelCore(g, k = 2, rounds).edges.queryExecution.analyzed
         .collect { case p => p }.size
       graft.Caches.clear()
       n
@@ -161,7 +217,7 @@ class KCoreSpec extends SparkSpec {
   }
 
   test("a 40-link tail reaches its fixpoint with maxRounds = 40") {
-    val fixed = GraphQueries.peelCoreFixpoint(longTail(40), k = 2, maxRounds = 40)
+    val fixed = GraphQueries.peelCoreFixpoint(longTail(40), k = 2, maxRounds = 40).edges
       .select(col("src_id")).distinct().as[Long].collect().toSet
     graft.Caches.clear()
     assert(fixed === Set(1L, 2L, 3L, 4L))

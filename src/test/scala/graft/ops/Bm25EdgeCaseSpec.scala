@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.{Caches, SparkEntry, SparkSpec}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{broadcast, col}
 import scala.math.BigDecimal.RoundingMode
 
 /** docs_bm25_search on a corpus built to hit its edge cases: an empty
@@ -50,5 +52,54 @@ class Bm25EdgeCaseSpec extends SparkSpec {
     Caches.clear()
     assert(got.map(_._1).toSet === Set(3L, 5L), "only the documents holding a query term score")
     assert(got === reference)
+  }
+
+  private def search(docs: Seq[(Long, Option[String])]): Seq[(Long, Double)] = {
+    val dir = java.nio.file.Files.createTempDirectory("bm25_corpus").toString
+    docs.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("docs_bm25_search")(spark, dir).as[(Long, Double)].collect().toSeq
+    Caches.clear()
+    got
+  }
+
+  test("an empty corpus has n_docs 0 and a null avgdl, and scores nothing") {
+    val (_, stats) = Caches.materialize(
+      SearchQueries.bm25PerDoc(Seq.empty[(Long, String)].toDF("doc_id", "text")),
+      SearchQueries.bm25Stats.head, SearchQueries.bm25Stats.tail: _*)
+    Caches.clear()
+    assert(stats.getLong(0) === 0L)
+    assert(stats.isNullAt(1), "avgdl over no documents")
+    assert(search(Seq.empty) === Seq.empty)
+    assert(search(Seq(1L -> Some(""), 2L -> None)) === Seq.empty, "only token-less documents")
+  }
+
+  test("a corpus with no query term scores nothing") {
+    assert(search(Seq(1L -> Some("plain words"), 2L -> Some("nothing else here"))) === Seq.empty)
+  }
+
+  test("statistics as literals score bit for bit as the broadcast statistics row") {
+    val vocab = Seq("vector", "stream", "hash", "plain", "words", "of", "a", "store")
+    val rnd = new scala.util.Random(5150)
+    for (round <- 1 to 4) {
+      val docs = (1L to 60L).map { id =>
+        val n = rnd.nextInt(12)
+        id -> (if (n == 0 && rnd.nextBoolean()) None
+          else Some(Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+      }.toDF("doc_id", "text")
+      val literal = SearchQueries.bm25Scored(docs)
+        .as[(Long, java.math.BigDecimal)].collect().toMap
+      // the same parts with the statistics as one broadcast row
+      val perDoc = SearchQueries.bm25PerDoc(docs)
+      val stats = perDoc.agg(SearchQueries.bm25Stats.head, SearchQueries.bm25Stats.tail: _*)
+      val broadcastRow: DataFrame = perDoc
+        .filter(col("tf_0") > 0 || col("tf_1") > 0 || col("tf_2") > 0)
+        .crossJoin(broadcast(stats))
+        .select(col("doc_id"), SearchQueries.bm25Acc(col("n_docs"), col("avgdl"),
+          Seq(col("df_0"), col("df_1"), col("df_2"))).as("acc"))
+      val viaBroadcast = broadcastRow.as[(Long, java.math.BigDecimal)].collect().toMap
+      Caches.clear()
+      assert(literal.nonEmpty, s"round $round scores some document")
+      assert(literal === viaBroadcast, s"round $round")
+    }
   }
 }
